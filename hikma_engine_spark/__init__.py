@@ -18,8 +18,10 @@ Package layout:
 - ``pipeline``   — driver-side orchestrator with checkpoint/resume
 - ``functions``  — embeddings, similarity, text analysis (pandas UDFs)
 - ``operators``  — dedup (exact/MinHash/SimHash/Jaccard), ANN, graph algos,
-                   multimodal plumbing
+                   sketches, ranking, rules, layout, export
 - ``query``      — semantic / metadata / hybrid search + graph traversal
+- ``sources``    — schema-enforced transcript scan (parquet / Iceberg)
+- ``streaming``  — optional Structured Streaming front-end
 """
 
 __version__ = "0.1.0"

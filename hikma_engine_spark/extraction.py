@@ -186,26 +186,3 @@ def extract_mentions_batch(
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas body with the default vocab gazetteer."""
     yield from make_extractor()(batches)
-
-
-# ---- deterministic business-key minting (pure string formats) ----
-# (reference: createNodeId, src/modules/ast-parser.ts:130-139)
-
-def conv_node_id(conv_id: str) -> str:
-    return f"conv:{conv_id}"
-
-
-def turn_node_id(conv_id: str, turn_idx: int) -> str:
-    return f"turn:{conv_id}#{turn_idx}"
-
-
-def mention_node_id(conv_id: str, turn_idx: int, start: int) -> str:
-    return f"mention:{conv_id}#{turn_idx}#{start}"
-
-
-def entity_node_id(surface_norm: str) -> str:
-    return f"entity:{surface_norm}"
-
-
-def tool_node_id(tool_norm: str) -> str:
-    return f"tool:{tool_norm}"

@@ -29,7 +29,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .query import cache as query_cache
 from .splits import effective_scan_splits
 from .stages import discover, extract, link, materialize
 
@@ -108,6 +107,26 @@ def _parquet_file_counts(root: str) -> dict[str, int]:
     with ThreadPoolExecutor(min(32, len(paths))) as ex:
         counts = list(ex.map(lambda p: pq.read_metadata(p).num_rows, paths))
     return {os.path.relpath(p, root): n for p, n in zip(paths, counts)}
+
+
+# suffixes of a table dir mid-swap: <table>.tmp is a new copy being
+# written, <table>.old the parked previous copy (see _swap_dir)
+_TMP, _OLD = ".tmp", ".old"
+
+
+def _swap_dir(new: str, final: str) -> None:
+    """Move a freshly written table dir into place so that a readable
+    table survives every crash point: park the old dir, move the new
+    one in, THEN delete the parked copy. A crash between the two
+    renames leaves ``final`` absent and ``final.old`` holding the data;
+    ``Pipeline._sweep`` restores it on the next run."""
+    old = final + _OLD
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.exists(final):
+        os.replace(final, old)
+    os.replace(new, final)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 @dataclass
@@ -204,7 +223,7 @@ class Pipeline:
         metadata-only scan), not from the input plan — counting the
         plan itself would re-execute every upstream UDF a second time.
         """
-        tmp = self._path(name) + ".tmp"
+        tmp = self._path(name) + _TMP
         final = self._path(name)
         df = self._prep_for_write(df, name)
         writer = df.write.mode("overwrite")
@@ -215,9 +234,7 @@ class Pipeline:
             # a partitioned write of zero rows emits no files at all —
             # rewrite unpartitioned so the table keeps a readable schema
             df.limit(0).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
+        _swap_dir(tmp, final)
         per_part = _parquet_file_counts(final)
         return {
             "rows": sum(per_part.values()),
@@ -422,11 +439,11 @@ class Pipeline:
         }
         result = PipelineResult(run_id=self.run_id, out_dir=self.out_dir)
         t0 = time.time()
+        self._sweep()
         # same stale-plan-cache guard as run_incremental: a cached plan
         # from an earlier run over this out_dir would serve pre-rewrite
         # file contents after phases overwrite their tables
         self.spark.catalog.clearCache()
-        query_cache.invalidate_all()
         watermark = self._input_watermark()
 
         def state_row(phase: str, status: str, started: str, stats: dict) -> None:
@@ -599,6 +616,7 @@ class Pipeline:
                 "input itself — remove the conversations from the input "
                 "instead of passing an explicit deletion list"
             )
+        self._sweep()
         # fail fast (before any write) when the stored tables were built
         # WITHOUT the bucketed layout — otherwise the mismatch surfaces
         # as an UNRESOLVED_COLUMN `bucket` crash halfway through
@@ -614,10 +632,8 @@ class Pipeline:
         # drop cached plans from earlier runs: Spark's CacheManager
         # matches by logical plan, so a cache built over THIS out_dir's
         # previous file contents would silently serve stale data after
-        # the copy-on-write swaps below (QueryCache entries likewise:
-        # their persisted plans reference the pre-swap dirs)
+        # the copy-on-write swaps below
         self.spark.catalog.clearCache()
-        query_cache.invalidate_all()
         result = PipelineResult(run_id=rid, out_dir=self.out_dir)
         watermark = self._input_watermark(delta_path)
         started = _now()
@@ -979,10 +995,24 @@ class Pipeline:
     def _swap(self, tmp_name: str, final_name: str) -> None:
         """Replace a table dir with a freshly-written one (the parquet
         emulation of an atomic MERGE commit)."""
-        tmp, final = self._path(tmp_name), self._path(final_name)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
+        _swap_dir(self._path(tmp_name), self._path(final_name))
+
+    def _sweep(self) -> None:
+        """Finish the swaps a crash interrupted, before anything reads
+        the store: a parked ``<t>.old`` whose table is missing IS the
+        table (crash between the two renames of ``_swap_dir``) and is
+        moved back; otherwise it is a stale copy and is deleted, as is
+        every half-written ``<t>.tmp``."""
+        for entry in os.listdir(self.out_dir):
+            path = self._path(entry)
+            if entry.endswith(_OLD):
+                table = path[: -len(_OLD)]
+                if os.path.exists(table):
+                    shutil.rmtree(path)
+                else:
+                    os.replace(path, table)
+            elif entry.endswith(_TMP):
+                shutil.rmtree(path)
 
     # ---- maintenance ----
     _COMPACTABLE = ("conversations", "mentions", "links", "same_as", "nodes", "edges")
@@ -1005,33 +1035,16 @@ class Pipeline:
         re-verified BEFORE the swap; byte-level digest equality pinned
         by ``test_incremental.test_compact_preserves_content``),
         using the same atomic tmp-write + swap as every other write.
-        Only fragmented tables are touched; query caches invalidated.
+        Only fragmented tables are touched.
         """
-        from .query import cache as query_cache
-
+        # leftovers of a crashed earlier swap are settled for EVERY
+        # table first — a table that never re-crosses the fragmentation
+        # threshold would otherwise keep a stale copy on disk forever
+        self._sweep()
         report: dict[str, dict] = {}
         default_par = self.spark.sparkContext.defaultParallelism
         for name in tables or self._COMPACTABLE:
             path = self._path(name)
-            # recover/sweep leftovers of a CRASHED previous compact()
-            # before any rewrite decision (r4 advice 5) — otherwise a
-            # table that never re-crosses the fragmentation threshold
-            # keeps a full stale copy on disk forever:
-            # - .compact_old present + table present: crash after the
-            #   swap completed but before cleanup → drop the stale copy
-            # - .compact_old present + table ABSENT: crash between the
-            #   two os.replace calls → the old dir IS the table;
-            #   restore it (the documented mid-swap recovery)
-            # - .compact_tmp: incomplete rewrite, always safe to drop
-            old_dir = path + ".compact_old"
-            if os.path.exists(old_dir):
-                if not os.path.exists(path):
-                    os.replace(old_dir, path)
-                else:
-                    shutil.rmtree(old_dir)
-            tmp_dir = path + ".compact_tmp"
-            if os.path.exists(tmp_dir):
-                shutil.rmtree(tmp_dir)
             if not os.path.exists(path):
                 continue
             before = _parquet_file_counts(path)
@@ -1079,9 +1092,7 @@ class Pipeline:
                 df = df.repartition(
                     max(1, min(default_par, total_bytes // (128 << 20) + 1))
                 )
-            tmp = path + ".compact_tmp"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
+            tmp = path + _TMP
             writer = df.write.mode("overwrite")
             if cols:
                 writer = writer.partitionBy(*cols)
@@ -1095,25 +1106,13 @@ class Pipeline:
                     f"{rows_before} → {rows_after}; rewrite aborted, "
                     "original table left untouched"
                 )
-            # crash-safe swap (ADVICE r3): keep a readable table at
-            # every crash point — park the old dir, move the new one
-            # in, THEN delete the old. A crash between the first two
-            # steps leaves path absent only for the duration of one
-            # rename (vs the full rmtree before), and the .old dir
-            # still holds the data for manual recovery.
-            old = path + ".compact_old"
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.replace(path, old)
-            os.replace(tmp, path)
-            shutil.rmtree(old)
+            _swap_dir(tmp, path)
             report[name] = {
                 "files_before": len(before),
                 "files_after": len(after),
                 "rows": rows_after,
                 "rewritten": True,
             }
-        query_cache.invalidate_all()
         self.spark.catalog.clearCache()
         self.state.append(
             {

@@ -55,10 +55,6 @@ def shuffle_count(df: DataFrame) -> int:
         physical_plan(df, "simple").count("Exchange rangepartitioning")
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return physical_plan(df, "simple").count("WholeStageCodegen")
-
-
 def partition_filters(df: DataFrame) -> str:
     """The PartitionFilters section of every scan — non-empty entries
     mean directory-level pruning happened BEFORE any file was opened

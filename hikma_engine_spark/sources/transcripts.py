@@ -56,19 +56,3 @@ def read_transcripts(
     if conv_prefix_filter:
         df = df.filter(F.col("conv_id").startswith(conv_prefix_filter))
     return df
-
-
-def read_incremental(
-    spark: SparkSession, path_or_table: str, start_snapshot_id: str | None = None
-) -> DataFrame:
-    """Incremental append read. On Iceberg:
-    ``option("start-snapshot-id", ...)``; on parquet the pipeline's
-    content-hash diff (pipeline.run_incremental) supplies the changed
-    set instead — this entry point exists so the call site is already
-    catalog-shaped."""
-    if path_or_table.startswith("iceberg:") and iceberg_available(spark):
-        reader = spark.read.format("iceberg")
-        if start_snapshot_id:
-            reader = reader.option("start-snapshot-id", start_snapshot_id)
-        return reader.load(path_or_table[len("iceberg:"):])
-    return read_transcripts(spark, path_or_table)

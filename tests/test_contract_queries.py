@@ -7,6 +7,8 @@ from __future__ import annotations
 import sys
 import os
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
@@ -749,3 +751,54 @@ def test_blocking_quality_never_materializes_pairs(spark):
     assert int(pdf.n_cand_pairs) >= int(pdf.tp)
     assert int(pdf.n_gold_pairs) >= int(pdf.tp)
     assert 0 <= int(pdf.rr_micro) <= 1000000
+
+
+def test_shared_dim_memo_drops_stale_sessions(spark):
+    """Schemas, doc mentions and shared dims live in one memo keyed by
+    applicationId; entries planted under another id (a stopped
+    session, whose checkpoint blocks are gone) are dropped by the next
+    lookup instead of accumulating."""
+    memo = entrymod._SHARED_DIM_MEMO
+    stale = {
+        ("app-stopped", SF_DIR, name): object()
+        for name in ("schema:documents", "doc_mentions", "custpart_edges")
+    }
+    memo.update(stale)
+    entrymod._t(spark, SF_DIR, "documents")
+    assert not set(stale) & set(memo)
+
+    entrymod._doc_mentions(spark, SF_DIR)
+    app = spark.sparkContext.applicationId
+    assert {(app, SF_DIR, "schema:documents"), (app, SF_DIR, "doc_mentions")} <= set(
+        memo
+    )
+    assert all(key[0] == app for key in memo)
+
+
+@pytest.mark.parametrize("name", ["g_cc_incremental", "d_incremental_dedup"])
+def test_scratch_state_is_private_to_its_input(spark, tmp_path, name):
+    """Entries that round-trip state through parquet (the component
+    map, the MinHash index) must not share the scratch dir between two
+    star-schema dirs with one basename: a DataFrame built over the
+    first still collects its own result after the second is built."""
+    import shutil
+
+    import pandas as pd
+
+    base = os.path.basename(SF_DIR)
+    a, b = str(tmp_path / "a" / base), str(tmp_path / "b" / base)
+    shutil.copytree(SF_DIR, a)
+    shutil.copytree(SF_DIR, b)
+    # b: the historical docs (< 400) get disjoint vocabularies, so its
+    # persisted map/index holds no pairs while a's does
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    old = docs.doc_id < 400
+    docs.loc[old, "text"] = [f"w{i}a w{i}b w{i}c w{i}d w{i}e" for i in docs.doc_id[old]]
+    docs.to_parquet(f"{b}/documents.parquet", index=False)
+
+    entry = entrymod.queries()[name]
+    expected = sorted(map(tuple, entry(spark, a).collect()))
+    df_a = entry(spark, a)
+    other = sorted(map(tuple, entry(spark, b).collect()))
+    assert other != expected, "precondition: the two inputs give different results"
+    assert sorted(map(tuple, df_a.collect())) == expected

@@ -117,25 +117,6 @@ def test_incremental_dedup_empty_batch(spark):
     assert pairs.count() == 0 and new_rows.count() == 0
 
 
-def test_resize_images_extreme_targets(spark):
-    """Upscale and 1x1 downscale both round-trip through the PNM codec."""
-    import numpy as np
-
-    from hikma_engine_spark.operators import multimodal as mm
-
-    img = np.arange(2 * 2 * 3, dtype=np.uint8).reshape(2, 2, 3)
-    rows = [("m", "image", bytearray(mm.encode_pnm(img)), ("image/x-ppm", 2, 2, None))]
-    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    up = mm.resize_images(df, out_w=8, out_h=8).toPandas()
-    dec, _ = mm.decode_pnm(bytes(up.iloc[0].payload))
-    assert dec.shape == (8, 8, 3)
-    down = mm.resize_images(df, out_w=1, out_h=1).toPandas()
-    dec1, _ = mm.decode_pnm(bytes(down.iloc[0].payload))
-    assert dec1.shape == (1, 1, 3)
-    # the 1x1 pixel is one of the originals (nearest-neighbor exactness)
-    assert tuple(dec1[0, 0]) in {tuple(px) for row in img for px in row}
-
-
 def test_embedding_ops_quarantine_null_embeddings(spark):
     """A null embedding (failed encode) must not kill an Arrow task in
     any embedding operator — it's dropped as a quarantine row."""

@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import json
 
+import pandas as pd
+
+from hikma_engine_spark.pipeline import Pipeline
 from hikma_engine_spark.query import graph_queries as gq
 
 
@@ -70,3 +73,37 @@ def test_cli_index_and_search(spark, corpus_path, tmp_path, capsys):
     assert rc == 0
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["nodes"]["Entity"] > 0
+    p = Pipeline(spark, "", out)
+    assert stats == gq.kg_stats(p.nodes(), p.edges())
+
+
+def test_cli_stats_current_after_incremental(spark, tiny_path, tmp_path, capsys):
+    """`stats` reads parquet footers, not a stored summary: after an
+    incremental run (one conversation deleted, one extended) it still
+    equals the groupBy counts over the tables."""
+    from hikma_engine_spark import cli
+
+    out = str(tmp_path / "cli_incr")
+    assert cli.main(
+        ["index", "--transcripts", tiny_path, "--out", out, "--buckets", "8"]
+    ) == 0
+    v1 = pd.read_parquet(tiny_path)
+    extra = v1[v1.conv_id == "c1"].tail(1).copy()
+    extra["turn_idx"] = extra["turn_idx"] + 1
+    extra["text"] = "postgres depends on redis and kafka now"
+    v2_path = str(tmp_path / "v2.parquet")
+    pd.concat([v1[v1.conv_id != "c2"], extra]).to_parquet(
+        v2_path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
+    )
+    assert cli.main(
+        ["incremental", "--transcripts", v2_path, "--out", out, "--buckets", "8"]
+    ) == 0
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])[
+        "changed_convs"
+    ] == 2
+
+    assert cli.main(["stats", "--out", out]) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    p = Pipeline(spark, "", out)
+    assert stats == gq.kg_stats(p.nodes(), p.edges())
+    assert "Mention" in stats["nodes"]

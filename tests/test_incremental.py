@@ -314,6 +314,54 @@ def test_incremental_crash_retry_repairs(
     assert _digest(p_retry.edges()) == _digest(p_full.edges())
 
 
+def test_incremental_retry_after_failed_final_swap(
+    spark, tiny_path, tmp_path, monkeypatch
+):
+    """The last commit step moves conversations_incr into place. If that
+    rename fails, the store must keep a recoverable conversations dim:
+    the retry re-detects the same delta and ends digest-equal to a full
+    rebuild (the old dir was parked, not deleted, before the rename)."""
+    import os
+
+    import pytest as _pytest
+
+    v1 = pd.read_parquet(tiny_path)
+    extra = v1[v1.conv_id == "c1"].tail(1).copy()
+    extra["turn_idx"] = extra["turn_idx"] + 1
+    extra["text"] = "postgres depends on redis now"
+    v2_path = str(tmp_path / "swap_v2.parquet")
+    _concat_like(v1, extra).to_parquet(
+        v2_path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
+    )
+    out = str(tmp_path / "swap_crash")
+    Pipeline(spark, tiny_path, out, run_id="v1", n_buckets=8).run(resume=False)
+
+    real_replace = os.replace
+
+    def failing_replace(src, dst):
+        if (
+            os.path.basename(src) == "conversations_incr"
+            and os.path.basename(dst) == "conversations"
+        ):
+            raise OSError("injected failure moving conversations_incr")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with _pytest.raises(OSError, match="injected failure"):
+        Pipeline(spark, v2_path, out, run_id="crashed", n_buckets=8).run_incremental()
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    p_retry = Pipeline(spark, v2_path, out, run_id="retry", n_buckets=8)
+    res = p_retry.run_incremental()
+    assert res.phase_stats["discover"]["changed_convs"] == 1
+
+    full_out = str(tmp_path / "swap_full")
+    p_full = Pipeline(spark, v2_path, full_out, run_id="full", n_buckets=8)
+    p_full.run(resume=False)
+    for table in ("nodes", "edges", "conversations"):
+        assert _digest(p_retry._read(table)) == _digest(p_full._read(table))
+
+
 def test_deleted_without_delta_raises(spark, corpus_path, tmp_path):
     """ADVICE r2: an explicit deletion list is only honored by delta
     mode — content-hash mode must reject it loudly, not drop it."""
@@ -426,7 +474,7 @@ def test_compact_bucketed_layout_with_plain_flag(spark, corpus_path, tmp_path):
 
 def test_compact_cleans_stale_old_dir(spark, corpus_path, tmp_path):
     """Crash-recovery of the round-4 three-step swap: a leftover
-    .compact_old dir from a crashed prior compact is cleaned on the
+    .old dir from a crashed prior compact is cleaned on the
     next run, and the table's content is untouched."""
     import os
     import shutil
@@ -435,18 +483,18 @@ def test_compact_cleans_stale_old_dir(spark, corpus_path, tmp_path):
     Pipeline(spark, corpus_path, out, run_id="v1").run(resume=False)
     p = Pipeline(spark, corpus_path, out, run_id="maint")
     before = _digest(p._read("nodes"))
-    stale = os.path.join(out, "nodes.compact_old")
+    stale = os.path.join(out, "nodes.old")
     os.makedirs(stale)
     with open(os.path.join(stale, "junk.parquet"), "w") as fh:
         fh.write("not parquet")
     p.compact(target_files_per_dir=0)
     assert not os.path.exists(stale)
-    assert not os.path.exists(os.path.join(out, "nodes.compact_tmp"))
+    assert not os.path.exists(os.path.join(out, "nodes.tmp"))
     assert _digest(p._read("nodes")) == before
 
 
 def test_compact_sweeps_stale_dirs_without_rewrite(spark, corpus_path, tmp_path):
-    """r4 advice 5: stale .compact_old/.compact_tmp are swept at
+    """r4 advice 5: stale .old/.tmp are swept at
     compact() start for EVERY table, even ones that never re-cross the
     fragmentation threshold (threshold left high → no rewrite)."""
     import os
@@ -455,21 +503,21 @@ def test_compact_sweeps_stale_dirs_without_rewrite(spark, corpus_path, tmp_path)
     Pipeline(spark, corpus_path, out, run_id="v1").run(resume=False)
     p = Pipeline(spark, corpus_path, out, run_id="maint")
     before = _digest(p._read("nodes"))
-    for suffix in (".compact_old", ".compact_tmp"):
+    for suffix in (".old", ".tmp"):
         d = os.path.join(out, "nodes" + suffix)
         os.makedirs(d)
         with open(os.path.join(d, "junk.parquet"), "w") as fh:
             fh.write("not parquet")
     report = p.compact(target_files_per_dir=10_000)
     assert not report["nodes"]["rewritten"]
-    assert not os.path.exists(os.path.join(out, "nodes.compact_old"))
-    assert not os.path.exists(os.path.join(out, "nodes.compact_tmp"))
+    assert not os.path.exists(os.path.join(out, "nodes.old"))
+    assert not os.path.exists(os.path.join(out, "nodes.tmp"))
     assert _digest(p._read("nodes")) == before
 
 
 def test_compact_restores_table_after_midswap_crash(spark, corpus_path, tmp_path):
     """r4 advice 5: a crash BETWEEN the two os.replace calls leaves the
-    table path absent and .compact_old holding the data; the next
+    table path absent and .old holding the data; the next
     compact() restores it automatically (no manual recovery)."""
     import os
 
@@ -477,9 +525,9 @@ def test_compact_restores_table_after_midswap_crash(spark, corpus_path, tmp_path
     Pipeline(spark, corpus_path, out, run_id="v1").run(resume=False)
     p = Pipeline(spark, corpus_path, out, run_id="maint")
     before = _digest(p._read("nodes"))
-    # simulate the mid-swap crash point: table parked at .compact_old
-    os.replace(os.path.join(out, "nodes"), os.path.join(out, "nodes.compact_old"))
+    # simulate the mid-swap crash point: table parked at .old
+    os.replace(os.path.join(out, "nodes"), os.path.join(out, "nodes.old"))
     p.compact(target_files_per_dir=10_000)
     assert os.path.exists(os.path.join(out, "nodes"))
-    assert not os.path.exists(os.path.join(out, "nodes.compact_old"))
+    assert not os.path.exists(os.path.join(out, "nodes.old"))
     assert _digest(p._read("nodes")) == before

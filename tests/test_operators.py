@@ -1,4 +1,4 @@
-"""operators/: dedup family, similarity search, multimodal plumbing."""
+"""operators/: dedup family, similarity search, graph operators."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hikma_engine_spark.operators import dedup, multimodal, similarity_search
+from hikma_engine_spark.operators import dedup, similarity_search
 
 
 @pytest.fixture(scope="module")
@@ -378,65 +378,6 @@ def test_embedding_near_dup_multiprobe(spark, vectors):
     assert (0, 1) in {(r.a, r.b) for r in pairs.itertuples()}
 
 
-def test_resize_images_roundtrip(spark):
-    """resize_images really resizes PNM payloads: the output payload
-    decodes to the target dims with nearest-neighbor-exact pixels;
-    codec formats get a NULL payload (stub boundary), corrupt PNM is
-    quarantined to NULL."""
-    from hikma_engine_spark.operators import multimodal as mm
-
-    img = np.arange(8 * 6 * 3, dtype=np.uint8).reshape(8, 6, 3)
-    good = mm.encode_pnm(img)
-    rows = [
-        ("ok", "image", bytearray(good), ("image/x-ppm", 6, 8, None)),
-        ("png", "image", bytearray(b"\x89PNG\r\n\x1a\n fake"), ("image/png", 4, 4, None)),
-        ("bad", "image", bytearray(b"P6\n6 8\n255\nshort"), ("image/x-ppm", 6, 8, None)),
-    ]
-    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = mm.resize_images(df, out_w=3, out_h=4).toPandas().set_index("media_id")
-    dec, maxval = mm.decode_pnm(bytes(out.loc["ok", "payload"]))
-    assert dec.shape == (4, 3, 3) and maxval == 255
-    assert np.array_equal(dec, mm.resize_image(img, 3, 4))
-    # nearest-neighbor is exact: every output pixel exists in the input
-    flat_in = {tuple(px) for row in img for px in row}
-    assert all(tuple(px) in flat_in for row in dec for px in row)
-    assert out.loc["png", "payload"] is None and out.loc["png", "codec"] == "png"
-    assert out.loc["bad", "payload"] is None and out.loc["bad", "codec"] == "pnm"
-
-
-def test_multimodal_feature_plumbing(spark):
-    rows = [
-        ("m1", "image", bytearray(b"\x89PNG fake"), ("image/png", 64, 64, None)),
-        ("m2", "video", bytearray(b"fake mp4"), ("video/mp4", None, None, 3500)),
-        ("m3", "image", None, ("image/png", 1, 1, None)),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    feats = multimodal.extract_features(df).toPandas()
-    assert len(feats) == 3
-    assert all(len(f) == 16 for f in feats.feature)
-    assert feats.set_index("media_id").loc["m3", "n_bytes"] == 0
-    # determinism
-    feats2 = multimodal.extract_features(df).toPandas()
-    assert list(feats.sort_values("media_id").feature.map(tuple)) == list(
-        feats2.sort_values("media_id").feature.map(tuple)
-    )
-
-
-def test_multimodal_frame_sampling(spark):
-    rows = [("v1", "video", bytearray(b"x"), ("video/mp4", None, None, 3500))]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    frames = multimodal.sample_frames(df, every_ms=1000).toPandas()
-    assert len(frames) == 3  # 3500ms // 1000ms
-    assert list(frames.frame_ts_ms) == [0, 1000, 2000]
-
-
-def test_multimodal_stub_raises_without_codec(spark):
-    rows = [("m1", "image", bytearray(b"z"), ("image/png", 4, 4, None))]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        multimodal.extract_features(df, decode_stub=False).collect()
-
-
 def test_jaccard_prefix_equals_naive(spark):
     """The prefix-filtered PPJoin path must return exactly the naive
     co-shingle join's pairs on a corpus with hot shingles and varied
@@ -487,103 +428,6 @@ def test_all_pairs_cosine_blocked_equals_broadcast(spark, vectors):
         )
     )
     assert bc == bl and bc
-
-
-def _ppm_bytes(w, h, rgb):
-    header = f"P6\n{w} {h}\n255\n".encode()
-    return header + bytes(rgb) * (w * h)
-
-
-def _wav_bytes(freq=440, rate=8000, sec=0.25):
-    import io
-    import wave
-
-    import numpy as np
-
-    t = np.arange(int(rate * sec)) / rate
-    samples = (np.sin(2 * np.pi * freq * t) * 20000).astype(np.int16)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(samples.tobytes())
-    return buf.getvalue()
-
-
-def test_multimodal_real_ppm_decode(spark):
-    """PNM images are REALLY decoded: a solid mid-gray image yields a
-    uniform 4x4 luminance grid at exactly 128/255."""
-    rows = [
-        ("gray", "image", bytearray(_ppm_bytes(8, 8, [128, 128, 128])), None),
-        ("white", "image", bytearray(_ppm_bytes(4, 4, [255, 255, 255])), None),
-        # ASCII P2 grayscale
-        ("ascii", "image", bytearray(b"P2\n2 2\n255\n0 255 255 0\n"), None),
-        # corrupt: header promises more pixels than the body has
-        ("corrupt", "image", bytearray(b"P6\n100 100\n255\nxx"), None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_features(df).toPandas().set_index("media_id")
-    assert out.loc["gray", "codec"] == "pnm"
-    assert np.allclose(out.loc["gray", "feature"], 128 / 255, atol=1e-6)
-    assert np.allclose(out.loc["white", "feature"], 1.0, atol=1e-6)
-    assert abs(float(np.mean(out.loc["ascii", "feature"])) - 0.5) < 0.01
-    assert out.loc["corrupt", "feature"] is None  # quarantined, not crashed
-
-
-def test_multimodal_pnm_maxval_handling(spark):
-    """maxval != 255 normalizes by the image's own maxval; 16-bit PNM
-    (2 bytes/sample) is rejected into quarantine, never mis-decoded."""
-    rows = [
-        # maxval=15 ASCII P2, all samples at max → features exactly 1.0
-        ("low_maxval", "image", bytearray(b"P2\n2 2\n15\n15 15 15 15\n"), None),
-        # 16-bit binary P5 → ValueError → NULL feature
-        ("deep", "image", bytearray(b"P5\n2 2\n65535\n" + bytes(8)), None),
-        # ASCII sample exceeding maxval → rejected
-        ("overflow", "image", bytearray(b"P2\n2 2\n15\n16 0 0 0\n"), None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_features(df).toPandas().set_index("media_id")
-    assert np.allclose(out.loc["low_maxval", "feature"], 1.0, atol=1e-6)
-    assert out.loc["deep", "feature"] is None
-    assert out.loc["overflow", "feature"] is None
-
-
-def test_multimodal_real_wav_decode(spark):
-    """WAV audio is REALLY decoded: a pure sine has its spectral energy
-    concentrated in the matching FFT band, and RMS ~ amplitude/sqrt(2)."""
-    rows = [
-        ("tone_low", "audio", bytearray(_wav_bytes(freq=100)), None),
-        ("tone_high", "audio", bytearray(_wav_bytes(freq=3500)), None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_features(df).toPandas().set_index("media_id")
-    assert (out.codec == "wav").all()
-    low, high = out.loc["tone_low", "feature"], out.loc["tone_high", "feature"]
-    # rms of a 20000/32768 sine ≈ 0.61/sqrt(2) ≈ 0.43
-    assert abs(low[0] - 0.43) < 0.03
-    # band energies (indices 2..): low tone peaks in an earlier band
-    assert int(np.argmax(low[2:])) < int(np.argmax(high[2:]))
-    # zero-crossing rate scales with frequency
-    assert high[1] > low[1]
-
-
-def test_multimodal_codec_boundary(spark):
-    """JPEG/PNG/MP4 payloads are the honest stub boundary: fake feature
-    under decode_stub=True, NotImplementedError otherwise — but real
-    PNM/WAV rows never hit the stub."""
-    rows = [
-        ("png", "image", bytearray(b"\x89PNG\r\n\x1a\n fake"), None),
-        ("ppm", "image", bytearray(_ppm_bytes(2, 2, [10, 10, 10])), None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_features(df, decode_stub=True).toPandas()
-    assert set(out.codec) == {"png", "pnm"}
-    with pytest.raises(Exception, match="NotImplementedError|PIL|ffmpeg"):
-        multimodal.extract_features(df, decode_stub=False).collect()
-    # real-format-only frame passes cleanly even with the stub off
-    real_only = spark.createDataFrame([rows[1]], multimodal.MEDIA_SCHEMA)
-    assert multimodal.extract_features(real_only, decode_stub=False).count() == 1
 
 
 def test_cc_distributed_natural_threshold(spark):
@@ -651,23 +495,6 @@ def test_ivf_ann_recall_and_exactness(spark):
     # determinism: retraining yields identical centroids
     cents2 = similarity_search.train_ivf_centroids(df, n_cells=10, seed=3)
     assert np.allclose(cents, cents2)
-
-
-def test_multimodal_pnm_crlf_separator(spark):
-    """ADVICE r2: Windows-written binary PNM separates maxval from pixel
-    data with b"\\r\\n" — must decode identically to the b"\\n" form, not
-    shift pixel data by one byte into confidently-wrong features."""
-    px = bytes([128] * 48)  # 4x4 RGB, uniform mid-gray
-    rows = [
-        ("unix", "image", bytearray(b"P6\n4 4\n255\n" + px), None),
-        ("windows", "image", bytearray(b"P6\n4 4\n255\r\n" + px), None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_features(df).toPandas().set_index("media_id")
-    assert np.allclose(out.loc["unix", "feature"], 128 / 255, atol=1e-6)
-    assert np.allclose(
-        out.loc["windows", "feature"], out.loc["unix", "feature"], atol=0
-    )
 
 
 def test_transitive_depth_diamond_and_chain(spark):
@@ -1306,49 +1133,3 @@ def test_incremental_cc_distributed_path(spark):
     assert {c for _, c in got} == {"n000"}
 
 
-def test_resample_audio_roundtrip(spark):
-    """WAV resample is REAL: downsampling a 100 Hz sine from 8 kHz to
-    4 kHz halves the sample count, preserves the tone (zero-crossing
-    count invariant — same duration, same frequency), and the output
-    decodes as valid WAV at the target rate."""
-    rows = [
-        ("tone", "audio", bytearray(_wav_bytes(freq=100, rate=8000, sec=0.5)), None),
-        ("garbage", "audio", bytearray(b"RIFFbroken-not-really-wav-data!!"), None),
-        ("img", "image", bytearray(b"P5 1 1 255 \x00"), None),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = (
-        multimodal.resample_audio(df, out_rate=4000)
-        .toPandas()
-        .set_index("media_id")
-    )
-    # image rows are filtered out (kind gate), audio rows remain
-    assert set(out.index) == {"tone", "garbage"}
-    # corrupt WAV quarantined as NULL payload, task survived
-    assert out.loc["garbage", "payload"] is None
-
-    t = out.loc["tone"]
-    assert t.n_samples == 2000  # 0.5 s at 4 kHz
-    samples, rate = multimodal.decode_wav(bytes(t.payload))
-    assert rate == 4000 and len(samples) == 2000
-    orig, orig_rate = multimodal.decode_wav(_wav_bytes(freq=100, rate=8000, sec=0.5))
-
-    def zc(x):
-        import numpy as _np
-
-        return int(_np.sum(_np.abs(_np.diff(_np.signbit(x).astype(int)))))
-
-    # 100 Hz over 0.5 s -> ~100 zero crossings at either rate
-    assert abs(zc(samples) - zc(orig)) <= 2
-    # linear interp preserves amplitude of a low-frequency tone
-    import numpy as _np
-
-    assert abs(_np.max(_np.abs(samples)) - _np.max(_np.abs(orig))) < 0.02
-
-
-def test_resample_audio_rejects_bad_rate(spark):
-    import pytest as _pytest
-
-    df = spark.createDataFrame([], multimodal.MEDIA_SCHEMA)
-    with _pytest.raises(ValueError):
-        multimodal.resample_audio(df, out_rate=0)

@@ -210,38 +210,6 @@ def test_comprehensive_search_has_name_source(spark, pipeline_out):
     assert res.source_weight.is_monotonic_decreasing
 
 
-def test_query_cache_ttl():
-    from hikma_engine_spark.query.cache import QueryCache
-
-    clock = {"t": 0.0}
-    calls = {"n": 0}
-
-    class FakeDF:  # duck-typed: cache layer only needs persist/unpersist
-        def persist(self):
-            return self
-
-        def unpersist(self):
-            return self
-
-    def compute():
-        calls["n"] += 1
-        return FakeDF()
-
-    qc = QueryCache(ttl_sec=10.0, max_entries=2, clock=lambda: clock["t"])
-    _df, cached = qc.get_or_compute("semantic", "q1", compute)
-    assert not cached and calls["n"] == 1
-    _df, cached = qc.get_or_compute("semantic", "q1", compute)
-    assert cached and calls["n"] == 1  # hit within TTL
-    clock["t"] = 11.0
-    _df, cached = qc.get_or_compute("semantic", "q1", compute)
-    assert not cached and calls["n"] == 2  # expired
-    # filters distinguish keys; eviction bounds entries
-    qc.get_or_compute("semantic", "q1", compute, filters={"type": "Turn"})
-    qc.get_or_compute("semantic", "q2", compute)
-    assert len(qc._store) <= 2
-    assert qc.hits == 1 and qc.misses == 4
-
-
 def test_result_kind_classification(spark):
     rows = [
         ("a", "is postgres faster than redis?"),
@@ -298,47 +266,6 @@ def test_result_kind_facets(spark, pipeline_out):
     )
     f = search.facets(res, columns=("result_kind",))
     assert sum(f["result_kind"].values()) == res.count()
-
-
-def test_query_cache_invalidate_all_registry():
-    """invalidate_all() reaches every live cache (the hook Pipeline
-    write/swap points call) and unpersists their entries."""
-    from hikma_engine_spark.query import cache as qc_mod
-
-    class FakeDF:
-        def __init__(self):
-            self.persisted = False
-
-        def persist(self):
-            self.persisted = True
-            return self
-
-        def unpersist(self):
-            self.persisted = False
-            return self
-
-    qc = qc_mod.QueryCache(ttl_sec=100.0)
-    df, cached = qc.get_or_compute("semantic", "q", FakeDF)
-    assert df.persisted and not cached
-    qc_mod.invalidate_all()
-    assert not df.persisted
-    # next lookup is a miss (recomputes against post-swap table state)
-    _df2, cached2 = qc.get_or_compute("semantic", "q", FakeDF)
-    assert not cached2
-
-
-def test_pipeline_run_invalidates_query_caches(monkeypatch, spark, tiny_path, tmp_path):
-    """Pipeline.run calls the cache-invalidation hook at its stale-plan
-    guard, so persisted query results never outlive a table swap."""
-    from hikma_engine_spark.pipeline import Pipeline
-    from hikma_engine_spark.query import cache as qc_mod
-
-    calls = {"n": 0}
-    monkeypatch.setattr(
-        qc_mod, "invalidate_all", lambda: calls.__setitem__("n", calls["n"] + 1)
-    )
-    Pipeline(spark, tiny_path, str(tmp_path / "qc_out"), run_id="qc").run(resume=False)
-    assert calls["n"] == 1
 
 
 def test_hybrid_search_structural_dimension(spark):
