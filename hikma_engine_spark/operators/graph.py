@@ -1,11 +1,34 @@
 """Distributed graph algorithms over (src, dst) edge DataFrames.
 
-- connected_components: iterative min-label propagation to fixpoint
-  (the scale generalization of the reference's driver-side DFS/BFS:
-  computeTransitiveDepth src/modules/ast-parser.ts:440-449 and
-  findCallChain src/utils/in-memory-graph.ts:236-266). No GraphFrames
-  dependency; lineage cut per iteration with localCheckpoint.
-- k_hop / neighbors: join-based traversal (SURVEY.md §3.3 mapping).
+Every iterative operator here is a loop of synchronous rounds, and all
+of them run through ONE superstep driver, ``_supersteps`` (the Pregel
+model, Malewicz et al., SIGMOD 2010): an operator supplies its initial
+state DataFrame and a ``step(state, round) -> state`` function; the
+driver owns the round budget, the lineage cut (an eager
+localCheckpoint, every round or every ``cut_every`` rounds), the
+early-exit probe, and the ConvergenceError of operators whose contract
+is a fixpoint. Two loops stay hand-rolled, each with its reason at the
+loop: ``deterministic_walks`` persists instead of cutting, and
+``__spark_entry__.g_eigencentrality`` keeps all rounds in one job.
+
+The shared building blocks, one copy each:
+- ``_small_edge_list``: the bounded driver-size probe in front of every
+  operator with a pure-Python twin (CC, depth, the two walks);
+- ``_simple_pairs`` / ``_undirected``: the simple undirected edge set
+  (nulls and self-loops dropped, one row per unordered pair, or both
+  directions of it);
+- ``_walk_with_restart``: the random walk with restart behind
+  ``pagerank`` (uniform restart) and ``personalized_pagerank`` (seed
+  restart), driver twin plus distributed path;
+- ``_min_relaxation``: the frontier-pruned min-relaxation behind
+  ``bounded_sssp`` (value dist + w) and ``temporal_reachability``
+  (value t, usable when t >= arrival);
+- ``_triangles``: the degree-oriented wedge enumeration behind
+  ``triangle_counts`` and ``edge_support`` (and, through the latter,
+  the entry file's k-truss);
+- ``_pr`` / ``_priority_frontier`` / ``_decide``: the hash priority,
+  the priority-local-minimum frontier and the merge-back shared by
+  ``luby_mis`` and ``jp_coloring``.
 
 Skew note: hot labels (giant components) funnel through groupBy(min)
 — Spark's map-side partial aggregation absorbs the hot key (each task
@@ -15,8 +38,82 @@ min(); AQE handles residual join skew.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+_INF = 2**62  # larger than any relaxed value; coalesce sentinel
+
+
+class ConvergenceError(RuntimeError):
+    """An iterative operator exhausted its round budget without reaching
+    the fixpoint its contract promises — raising beats silently
+    returning split components or a truncated answer."""
+
+
+def _supersteps(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    *,
+    until: Callable[[DataFrame, DataFrame], bool] | None = None,
+    cut_every: int = 1,
+    fixpoint: str | None = None,
+) -> DataFrame:
+    """The round loop of every iterative operator in this module:
+    ``state = step(state, r)`` for r = 1..``rounds``.
+
+    - Lineage cut: the state is materialized with an eager
+      localCheckpoint every ``cut_every`` rounds and after the last
+      round, so each round plans against a flat relation instead of a
+      logical tree that grows with the round count. A cadence above 1
+      suits loops whose state is referenced once per round (the
+      uncut tree only deepens linearly in between).
+    - Early exit: ``until(new, old)`` runs on every cut state (``old``
+      is the previous cut state, or the initial one) and ends the loop
+      when it returns True.
+    - Fixpoint contract: with ``fixpoint`` set (the error message), a
+      budget that runs out before ``until`` fired raises
+      ConvergenceError; without it the last state is the answer
+      (fixed-round operators).
+    """
+    prev = state
+    for r in range(1, rounds + 1):
+        state = step(state, r)
+        if r % cut_every and r < rounds:
+            continue
+        state = state.localCheckpoint(eager=True)
+        if until is not None and until(state, prev):
+            return state
+        prev = state
+    if fixpoint is not None:
+        raise ConvergenceError(fixpoint)
+    return state
+
+
+def _is_empty(df: DataFrame) -> bool:
+    return df.limit(1).count() == 0
+
+
+def _same_rows(new: DataFrame, old: DataFrame) -> bool:
+    """Fixpoint probe for distinct-row states: equal sizes (cheap
+    counts of materialized states) and no row of ``new`` missing from
+    ``old`` — same-size sets need only one direction."""
+    return new.count() == old.count() and _is_empty(new.exceptAll(old))
+
+
+def _frontier_empty(new: DataFrame, _old: DataFrame) -> bool:
+    """Early-exit probe for states that mark their frontier (the rows
+    added or improved by the last round) with a ``fresh`` column."""
+    return _is_empty(new.filter("fresh"))
+
+
+def _npart(spark, n_rows: int) -> int:
+    """Shuffle width sized to the data: tiny states on a cores-wide
+    shuffle are pure task overhead; big ones keep full width."""
+    return max(1, min(spark.sparkContext.defaultParallelism, n_rows // 20_000 + 1))
 
 
 def _keyed_checkpoint(df: DataFrame, key: str) -> DataFrame:
@@ -32,6 +129,51 @@ def _keyed_checkpoint(df: DataFrame, key: str) -> DataFrame:
     out across the cores. One shuffle, one materialization, no count
     probe."""
     return df.repartition(F.col(key)).localCheckpoint(eager=True)
+
+
+def _small_edge_list(
+    edges: DataFrame, src: str, dst: str, threshold: int
+) -> list[tuple] | None:
+    """The bounded driver-size probe: the (src, dst) pairs of ``edges``
+    (nulls and self-loops dropped) when it has at most ``threshold``
+    rows, else None — counted through a limit, so a large input is
+    never collected. ``threshold <= 0`` forces the distributed path."""
+    if threshold <= 0 or edges.limit(threshold + 1).count() > threshold:
+        return None
+    return [
+        (a, b)
+        for a, b in edges.select(src, dst).collect()
+        if a is not None and b is not None and a != b
+    ]
+
+
+def _simple_pairs(
+    edges: DataFrame, a_col: str, b_col: str, assume_simple: bool = False
+) -> DataFrame:
+    """The simple undirected edge set as one (u, v) row per unordered
+    pair: nulls and self-loops dropped, then (unless the caller
+    guarantees distinct pairs with no (v, u) twin — ``assume_simple``,
+    the round-6 opt-in that skips the wide distinct) canonicalized to
+    u < v and deduplicated."""
+    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).filter(
+        "u IS NOT NULL AND v IS NOT NULL AND u <> v"
+    )
+    if assume_simple:
+        return e
+    return e.selectExpr("least(u, v) AS u", "greatest(u, v) AS v").distinct()
+
+
+def _both_ways(pairs: DataFrame) -> DataFrame:
+    """Each unordered (u, v) pair as its two directed rows."""
+    return pairs.unionByName(pairs.selectExpr("v AS u", "u AS v"))
+
+
+def _undirected(
+    edges: DataFrame, a_col: str, b_col: str, assume_simple: bool = False
+) -> DataFrame:
+    """The simple undirected edge set as directed (u, v) rows, both
+    directions of every pair exactly once (see ``_simple_pairs``)."""
+    return _both_ways(_simple_pairs(edges, a_col, b_col, assume_simple))
 
 
 def _union_find_local(pairs: list[tuple[str, str]]) -> dict[str, str]:
@@ -51,11 +193,6 @@ def _union_find_local(pairs: list[tuple[str, str]]) -> dict[str, str]:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     return {n: find(n) for n in parent}
-
-
-class ConvergenceError(RuntimeError):
-    """Distributed CC exhausted its round budget without reaching the
-    fixpoint — raising beats silently returning split components."""
 
 
 def connected_components(
@@ -78,46 +215,26 @@ def connected_components(
       min-label propagation whose round count is the graph DIAMETER
       (a 10⁶-node chain would silently split under any fixed budget).
       Hot nodes are absorbed by map-side partial min aggregation;
-      lineage cut per round with localCheckpoint.
+      lineage cut per round.
 
     Raises ConvergenceError if the fixpoint is not reached in
     ``max_iter`` rounds (per round-1 advice: never return split
     components silently).
     """
     spark = edges.sparkSession
-    small = (
-        driver_threshold > 0
-        and edges.limit(driver_threshold + 1).count() <= driver_threshold
-    )
-    if small:
-        pairs = [
-            (r[0], r[1])
-            for r in edges.select(src, dst).collect()
-            if r[0] is not None and r[1] is not None and r[0] != r[1]
-        ]
+    pairs = _small_edge_list(edges, src, dst, driver_threshold)
+    if pairs is not None:
         mapping = _union_find_local(pairs)
         if not mapping:
             return spark.createDataFrame([], "node string, component string")
         return spark.createDataFrame(
             sorted(mapping.items()), ["node", "component"]
         )
-    # undirected edge set, one row per unordered pair
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # size the iteration's shuffle width to the data: tiny graphs on a
-    # 32-way shuffle are pure task overhead; big graphs keep full width
-    n_edges = e.count()
-    default_par = spark.sparkContext.defaultParallelism
-    npart = max(1, min(default_par, n_edges // 20_000 + 1))
+    # undirected edge set, one row per unordered pair a < b
+    e = _simple_pairs(edges, src, dst).toDF("a", "b").localCheckpoint(eager=True)
+    npart = _npart(spark, e.count())
 
-    for _ in range(max_iter):
+    def star_round(e: DataFrame, _r: int) -> DataFrame:
         # LARGE-STAR: for every node u, attach u's strictly-larger
         # neighbors to m(u) = min(N(u) ∪ {u})
         adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
@@ -137,7 +254,7 @@ def connected_components(
         # parent (large-star output is already child > parent directed)
         m_small = large.groupBy("child").agg(F.min("parent").alias("m"))
         joined = large.join(m_small, "child")
-        new_e = (
+        return (
             joined.select(F.col("child").alias("a"), F.col("m").alias("b"))
             .unionByName(
                 joined.select(F.col("parent").alias("a"), F.col("m").alias("b"))
@@ -147,32 +264,27 @@ def connected_components(
             .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
             .distinct()
             .repartition(npart, "a")
-            .localCheckpoint(eager=True)
         )
-        # fixpoint: the edge set is stable (counts first — cheap — then
-        # an exact symmetric-difference probe; same-size sets need only
-        # one direction of exceptAll)
-        new_cnt = new_e.count()
-        stable = (
-            new_cnt == n_edges and new_e.exceptAll(e).limit(1).count() == 0
-        )
-        e = new_e
-        n_edges = new_cnt
-        if stable:
-            # converged e is a star set under the a < b invariant:
-            # a = root (component minimum), b = child
-            labels = e.select(
-                F.col("b").alias("node"), F.col("a").alias("component")
-            ).unionByName(
-                e.select(F.col("a").alias("node"), F.col("a").alias("component"))
-            )
-            # a node can transiently be both a root and a child of the
-            # true root; groupBy-min resolves to the component minimum
-            return labels.groupBy("node").agg(F.min("component").alias("component"))
-    raise ConvergenceError(
-        f"connected_components did not converge in {max_iter} "
-        "large-star/small-star rounds"
+
+    # fixpoint: the edge set is stable
+    e = _supersteps(
+        e,
+        star_round,
+        max_iter,
+        until=_same_rows,
+        fixpoint=f"connected_components did not converge in {max_iter} "
+        "large-star/small-star rounds",
     )
+    # converged e is a star set under the a < b invariant:
+    # a = root (component minimum), b = child
+    labels = e.select(
+        F.col("b").alias("node"), F.col("a").alias("component")
+    ).unionByName(
+        e.select(F.col("a").alias("node"), F.col("a").alias("component"))
+    )
+    # a node can transiently be both a root and a child of the
+    # true root; groupBy-min resolves to the component minimum
+    return labels.groupBy("node").agg(F.min("component").alias("component"))
 
 
 def incremental_connected_components(
@@ -284,11 +396,11 @@ def transitive_depth(
 
     Reference analog: ``computeTransitiveDepth``
     (src/modules/ast-parser.ts:440-449) — a driver-side DFS there;
-    here one equi-join + groupBy-max relaxation round per depth level,
-    lineage cut with localCheckpoint. Round count equals the longest
-    path length — dependency graphs are shallow (package/module DAGs
-    rarely exceed depth ~20); a 10⁶-deep chain would want pointer
-    doubling instead, which this deliberately does not implement.
+    here one equi-join + groupBy-max relaxation round per depth level.
+    Round count equals the longest path length — dependency graphs are
+    shallow (package/module DAGs rarely exceed depth ~20); a 10⁶-deep
+    chain would want pointer doubling instead, which this deliberately
+    does not implement.
 
     Raises ConvergenceError after ``max_iter`` rounds: a cycle makes
     longest-path depth undefined, and raising beats silently reporting
@@ -302,16 +414,8 @@ def transitive_depth(
     is pinned by pytest (test_transitive_depth_distributed_equals_driver).
     """
     spark = edges.sparkSession
-    small = (
-        driver_threshold > 0
-        and edges.limit(driver_threshold + 1).count() <= driver_threshold
-    )
-    if small:
-        pairs = [
-            (r[0], r[1])
-            for r in edges.select(src, dst).collect()
-            if r[0] is not None and r[1] is not None and r[0] != r[1]
-        ]
+    pairs = _small_edge_list(edges, src, dst, driver_threshold)
+    if pairs is not None:
         mapping = _transitive_depth_driver(pairs)
         if not mapping:
             return spark.createDataFrame([], "node string, depth int")
@@ -330,34 +434,29 @@ def transitive_depth(
         .unionByName(e.select(F.col("t").alias("node")))
         .distinct()
     )
-    depth = nodes.withColumn("depth", F.lit(0)).localCheckpoint(eager=True)
-    for _ in range(max_iter):
+
+    def relax(depth: DataFrame, _r: int) -> DataFrame:
         cand = (
             e.join(depth, e["t"] == depth["node"])
             .select(F.col("s"), (F.col("depth") + 1).alias("d1"))
             .groupBy("s")
             .agg(F.max("d1").alias("cand"))
         )
-        new_depth = (
-            depth.join(cand, depth["node"] == cand["s"], "left")
-            .select(
-                "node",
-                F.greatest(
-                    F.col("depth"), F.coalesce(F.col("cand"), F.lit(0))
-                ).alias("depth"),
-            )
-            .localCheckpoint(eager=True)
+        return depth.join(cand, depth["node"] == cand["s"], "left").select(
+            "node",
+            F.greatest(F.col("depth"), F.coalesce(F.col("cand"), F.lit(0))).alias(
+                "depth"
+            ),
         )
-        changed = (
-            new_depth.join(depth, ["node", "depth"], "left_anti").limit(1).count()
-        )
-        depth = new_depth
-        if changed == 0:
-            return depth
-    raise ConvergenceError(
-        f"transitive_depth did not converge in {max_iter} rounds — "
+
+    return _supersteps(
+        nodes.withColumn("depth", F.lit(0)),
+        relax,
+        max_iter,
+        until=_same_rows,
+        fixpoint=f"transitive_depth did not converge in {max_iter} rounds — "
         "the edge set likely contains a cycle (longest-path depth is "
-        "only defined on a DAG)"
+        "only defined on a DAG)",
     )
 
 
@@ -383,34 +482,38 @@ def k_hop(
 ) -> DataFrame:
     """BFS to depth k with a visited-set anti-join per round (reference:
     findCallChain BFS with maxDepth, src/utils/in-memory-graph.ts:236-266).
-    Returns (id, depth) of reached nodes."""
+    The state is the visited set; its ``fresh`` rows (reached last
+    round) are the frontier, and the loop stops early when a round
+    reaches nothing new. Returns (id, depth) of reached nodes."""
     spark = edges.sparkSession
     e = edges if edge_type is None else edges.filter(F.col("edge_type") == edge_type)
     e = e.select("src", "dst")
-    frontier = spark.createDataFrame([(n, 0) for n in start_ids], ["id", "depth"])
-    visited = frontier
-    for depth in range(1, k + 1):
+    start = spark.createDataFrame([(n, 0) for n in start_ids], ["id", "depth"])
+
+    def hop(visited: DataFrame, r: int) -> DataFrame:
+        front = visited.filter(F.col("fresh"))
         nxt = (
-            e.join(frontier.hint("broadcast"), e.src == frontier.id)
+            e.join(front.hint("broadcast"), e.src == front.id)
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(visited, "id", "left_anti")
-            .withColumn("depth", F.lit(depth))
         )
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+        return visited.withColumn("fresh", F.lit(False)).unionByName(
+            nxt.select("id", F.lit(r).alias("depth"), F.lit(True).alias("fresh"))
+        )
+
+    return _supersteps(
+        start.withColumn("fresh", F.lit(True)), hop, k, until=_frontier_empty
+    ).drop("fresh")
 
 
-def _pagerank_driver(
-    edge_list: list[tuple[str, str]], damping: float, n_iter: int
+def _walk_driver(
+    edge_list: list[tuple[str, str]], seed: str | None, alpha: float, n_iter: int
 ) -> list[tuple[str, float]]:
-    """Driver twin: the identical recurrence on a collected edge list
-    (numpy float64, contribs accumulated in sorted-edge order so the
-    result is deterministic). Bounded by ``driver_threshold``."""
+    """Driver twin of ``_walk_with_restart``: the identical recurrence
+    on a collected edge list (numpy float64, contribs accumulated in
+    sorted-edge order so the result is deterministic). Bounded by
+    ``driver_threshold``."""
     import numpy as np
 
     edge_list = sorted(edge_list)  # accumulate in a fixed order
@@ -422,14 +525,115 @@ def _pagerank_driver(
     deg = np.bincount(srcs, minlength=n).astype(np.float64)
     dangling = deg == 0
     deg[dangling] = 1.0  # self-loop treatment: dangling keeps own mass
-    ranks = np.full(n, 1.0 / n)
-    teleport = (1.0 - damping) / n
+    if seed is None:
+        restart = np.full(n, 1.0 / n)
+    else:
+        restart = np.zeros(n)
+        if seed in idx:
+            restart[idx[seed]] = 1.0
+    ranks = restart.copy()
     for _ in range(n_iter):
         contrib = np.zeros(n)
         np.add.at(contrib, dsts, ranks[srcs] / deg[srcs])
         contrib[dangling] += ranks[dangling]
-        ranks = teleport + damping * contrib
+        ranks = alpha * restart + (1.0 - alpha) * contrib
     return [(u, float(ranks[idx[u]])) for u in ids]
+
+
+def _walk_with_restart(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    seed: str | None,
+    alpha: float,
+    n_iter: int,
+    driver_threshold: int,
+    out_col: str,
+) -> DataFrame:
+    """Random walk with restart over a directed edge list, fixed
+    iterations:
+        r_0      = v
+        r_{i+1}  = alpha * v + (1 - alpha) * P^T r_i
+    with restart vector v = uniform 1/n when ``seed`` is None (PageRank,
+    alpha = 1 - damping) or the indicator of ``seed`` (personalized
+    PageRank). Dangling nodes get the SELF-LOOP treatment (they keep
+    their own walked mass) — it needs no global mass total, so an
+    iteration is pure join+aggregate with nothing on the driver.
+    Returns (node, ``out_col``) for every node incident to an edge.
+
+    Two physical strategies, same recurrence (pinned equal to 1e-12 by
+    ``test_operators.test_pagerank_driver_equals_distributed`` and
+    ``test_ppr_driver_equals_distributed``):
+    - ≤ ``driver_threshold`` edges: collected numpy power iteration —
+      a 10-node co-mention graph costs ~20 scheduler round-trips as a
+      join loop and ~1 ms as vector math (the collect is BOUNDED by
+      the threshold probe).
+    - larger: per iteration one join (edge × rank, co-partitioned on
+      src) + one groupBy(dst) — both map-side-combinable; hot
+      destinations absorbed by partial aggregation (sum is
+      algebraic); lineage cut every 3 rounds (the state is referenced
+      once per round, so no double-evaluation in between).
+    """
+    # materialize the deduped edge list ONCE — every branch below needs
+    # it at least twice (threshold probe + collect, or degree + rounds)
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    spark = e.sparkSession
+    pairs = _small_edge_list(e, "src", "dst", driver_threshold)
+    if pairs is not None:
+        if not pairs:
+            return spark.createDataFrame([], f"node string, {out_col} double")
+        return spark.createDataFrame(
+            _walk_driver(pairs, seed, alpha, n_iter), ["node", out_col]
+        )
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    # self-loop treatment materialized: dangling nodes (no out-edge)
+    # get an explicit self-edge, after which every node has deg >= 1
+    # and the recurrence is closed over the edge list alone; the
+    # out-degree rides on each edge row, computed once
+    dangling = nodes.join(
+        e.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
+    )
+    e_closed = e.unionByName(
+        dangling.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+    )
+    e_closed = _keyed_checkpoint(
+        e_closed.withColumn("deg", F.count("*").over(Window.partitionBy("src"))),
+        "src",
+    )
+    if seed is None:
+        restart = F.lit(1.0 / nodes.count())
+    else:
+        restart = F.when(F.col("node") == seed, F.lit(1.0)).otherwise(F.lit(0.0))
+
+    def walk(ranks: DataFrame, _r: int) -> DataFrame:
+        contribs = (
+            e_closed.join(ranks.withColumnRenamed("node", "src"), "src")
+            .select(
+                F.col("dst").alias("node"),
+                (F.col(out_col) / F.col("deg")).alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("contrib"))
+        )
+        return nodes.join(contribs, "node", "left").select(
+            "node",
+            (
+                F.lit(alpha) * restart
+                + F.lit(1.0 - alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
+            ).alias(out_col),
+        )
+
+    return _supersteps(nodes.withColumn(out_col, restart), walk, n_iter, cut_every=3)
 
 
 def pagerank(
@@ -448,116 +652,13 @@ def pagerank(
     replaying the same recurrence agrees to rounding — that is what
     makes the operator oracle-checkable, and what makes a resumed run
     reproducible (north-rule determinism, same reason the id minting
-    bans UUIDs). Dangling nodes get the SELF-LOOP treatment (they keep
-    their own damped mass) — it needs no global mass total, so an
-    iteration is pure join+aggregate with nothing on the driver.
-
-    Two physical strategies, same recurrence (pinned equal to 1e-12 by
-    ``test_operators.test_pagerank_driver_equals_distributed``):
-    - ≤ ``driver_threshold`` edges: collected numpy power iteration —
-      a 10-node co-mention graph costs ~20 scheduler round-trips as a
-      join loop and ~1 ms as vector math (the same economics as
-      ``connected_components``' union-find twin; the collect is
-      BOUNDED by the threshold probe).
-    - larger: per iteration one join (edge × rank, co-partitioned on
-      src) + one groupBy(dst) — 2 shuffles, both map-side-combinable;
-      hot destinations absorbed by partial aggregation (sum is
-      algebraic); lineage cut every 3 rounds (single-reference chain,
-      no double-evaluation in between).
+    bans UUIDs). The walk with a UNIFORM restart vector and restart
+    probability 1 - damping (``_walk_with_restart``: driver twin below
+    ``driver_threshold`` edges, distributed rounds above).
     """
-    # materialize the deduped edge list ONCE — every branch below needs
-    # it at least twice (threshold probe + collect, or degree + rounds)
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return _walk_with_restart(
+        edges, src, dst, None, 1.0 - damping, n_iter, driver_threshold, "rank"
     )
-    spark = e.sparkSession
-    small = (
-        driver_threshold > 0
-        and e.limit(driver_threshold + 1).count() <= driver_threshold
-    )
-    if small:
-        pairs = [(r[0], r[1]) for r in e.collect()]
-        if not pairs:
-            return spark.createDataFrame([], "node string, rank double")
-        return spark.createDataFrame(
-            _pagerank_driver(pairs, damping, n_iter), ["node", "rank"]
-        )
-    default_par = spark.sparkContext.defaultParallelism
-    n_edges = e.count()
-    npart = max(1, min(default_par, n_edges // 20_000 + 1))
-    e = e.repartition(npart, "src").localCheckpoint(eager=True)
-
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    # self-loop treatment materialized: dangling nodes (no out-edge)
-    # get an explicit self-edge, after which every node has deg >= 1
-    # and the recurrence is closed over the edge list alone
-    dangling = nodes.join(
-        e.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
-    )
-    e_closed = e.unionByName(
-        dangling.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    ).localCheckpoint(eager=True)
-    outdeg = e_closed.groupBy("src").agg(F.count("*").alias("deg"))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    teleport = (1.0 - damping) / n
-    for i in range(n_iter):
-        contribs = (
-            e_closed.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (i + 1) % 3 == 0 or i == n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
-
-
-def _ppr_driver(
-    edge_list: list[tuple[str, str]], seed: str, alpha: float, n_iter: int
-) -> list[tuple[str, float]]:
-    """Driver twin of ``personalized_pagerank`` (same recurrence on a
-    collected edge list; bounded by ``driver_threshold``)."""
-    import numpy as np
-
-    edge_list = sorted(edge_list)
-    ids = sorted({u for u, _ in edge_list} | {v for _, v in edge_list})
-    idx = {u: i for i, u in enumerate(ids)}
-    n = len(ids)
-    srcs = np.fromiter((idx[u] for u, _ in edge_list), dtype=np.int64)
-    dsts = np.fromiter((idx[v] for _, v in edge_list), dtype=np.int64)
-    deg = np.bincount(srcs, minlength=n).astype(np.float64)
-    dangling = deg == 0
-    deg[dangling] = 1.0
-    e_seed = np.zeros(n)
-    if seed in idx:
-        e_seed[idx[seed]] = 1.0
-    ranks = e_seed.copy()
-    for _ in range(n_iter):
-        contrib = np.zeros(n)
-        np.add.at(contrib, dsts, ranks[srcs] / deg[srcs])
-        contrib[dangling] += ranks[dangling]
-        ranks = alpha * e_seed + (1.0 - alpha) * contrib
-    return [(u, float(ranks[idx[u]])) for u in ids]
 
 
 def personalized_pagerank(
@@ -581,72 +682,50 @@ def personalized_pagerank(
     Recurrence (fixed iterations, oracle-replayable like ``pagerank``):
         r_0      = e_seed
         r_{i+1}  = alpha * e_seed + (1 - alpha) * P^T r_i
-    with the same dangling self-loop closure as ``pagerank`` (a node
-    with no out-edge keeps its damped mass). Fixed n_iter keeps the
-    result a pure function of (edges, seed, alpha, n_iter).
-
-    Scale shape: identical to ``pagerank`` — per iteration one
-    co-partitioned join (edge x rank) + one map-side-combinable
-    groupBy(dst); the rank vector is as sparse as the walk frontier in
-    early iterations but the plan is the same either way. Driver twin
-    below ``driver_threshold`` edges (bounded-probe economics, pinned
-    equal to the distributed path by
-    ``test_operators.test_ppr_driver_equals_distributed``).
+    — ``_walk_with_restart`` with the seed's indicator as restart
+    vector, so the dangling self-loop closure, the driver twin and the
+    distributed plan are pagerank's.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return _walk_with_restart(
+        edges, src, dst, seed, alpha, n_iter, driver_threshold, "score"
     )
-    spark = e.sparkSession
-    small = (
-        driver_threshold > 0
-        and e.limit(driver_threshold + 1).count() <= driver_threshold
-    )
-    if small:
-        pairs = [(r[0], r[1]) for r in e.collect()]
-        if not pairs:
-            return spark.createDataFrame([], "node string, score double")
-        return spark.createDataFrame(
-            _ppr_driver(pairs, seed, alpha, n_iter), ["node", "score"]
+
+
+def _triangles(pairs: DataFrame) -> DataFrame:
+    """Every triangle of the simple undirected graph ``pairs`` (unique
+    (u, v) rows with u < v) exactly once, as (u, v, w): apex u, v < w.
+
+    The classic degree-orientation algorithm: every edge is oriented
+    from its lower-(degree, id) endpoint to the higher one, which makes
+    the wedge join's fan-out per node O(sqrt(m)) on ANY graph (a node's
+    out-degree in the oriented graph is at most ~sqrt(2m)) — the hub
+    that would explode a naive adjacency self-join (degree² wedges)
+    becomes the JOINED side, never the wedge pivot. Each triangle has
+    ONE apex under the total order (the oriented graph is acyclic).
+    Four shuffles: two degree windows, wedge join, closure semi-join.
+    """
+    # orient each edge from its lower (deg, id) endpoint to the higher;
+    # both endpoint degrees come from windows over the symmetric rows
+    # (deg(v) = rows with that v), so no degree table is joined back
+    # (SQL-string expressions: one py4j round-trip each instead of one
+    # per Column node — DataFrame construction is a per-round cost of
+    # the iterating callers, e.g. the entry file's k-truss)
+    oriented = (
+        _both_ways(pairs)
+        .selectExpr(
+            "u",
+            "v",
+            "count(*) OVER (PARTITION BY u) AS du",
+            "count(*) OVER (PARTITION BY v) AS dv",
         )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .filter("du < dv OR (du = dv AND u < v)")
     )
-    dangling = nodes.join(
-        e.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
-    )
-    e_closed = e.unionByName(
-        dangling.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    ).localCheckpoint(eager=True)
-    outdeg = e_closed.groupBy("src").agg(F.count("*").alias("deg"))
-    seed_ind = F.when(F.col("node") == seed, F.lit(1.0)).otherwise(F.lit(0.0))
-    ranks = nodes.withColumn("score", seed_ind)
-    for i in range(n_iter):
-        contribs = (
-            e_closed.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("score") / F.col("deg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(alpha) * seed_ind
-                + F.lit(1.0 - alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("score"),
-        )
-        if (i + 1) % 3 == 0 or i == n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    # wedges: u -> v, u -> w with v < w (apex u has bounded out-degree)
+    wedges = oriented.join(oriented.selectExpr("u", "v AS w"), "u").filter("v < w")
+    # close the wedge: (v, w) must be an edge. Wedges already carry
+    # v < w, and the pairs are u < v, so a plain two-key equi-semi-join
+    # closes it (hash join, no expression keys)
+    return wedges.join(pairs.toDF("v", "w"), ["v", "w"], "left_semi")
 
 
 def triangle_counts(
@@ -657,62 +736,17 @@ def triangle_counts(
 ) -> DataFrame:
     """Per-node triangle counts over an UNDIRECTED simple graph given as
     unique (a < b) edge pairs — the graph-quality metric behind
-    clustering coefficients and community sanity checks.
+    clustering coefficients and community sanity checks. Triangles
+    come from ``_triangles`` (degree orientation, each counted once),
+    then each credits its three corners.
 
-    Scale shape: the classic degree-orientation algorithm. Every edge
-    is oriented from its lower-(degree, id) endpoint to the higher one,
-    which makes the wedge join's fan-out per node O(sqrt(m)) on ANY
-    graph (a node's out-degree in the oriented graph is at most
-    ~sqrt(2m)) — the hub that would explode a naive adjacency self-join
-    (degree² wedges) becomes the JOINED side, never the wedge pivot.
-    Each triangle is counted exactly once (its unique cyclic
-    orientation), then credited to all three corners. Three
-    shuffles: degree agg, wedge join, closure semi-join + count.
+    ``assume_canonical`` (round-6 opt.): the docstring contract is
+    already "unique (a < b) pairs" — a caller that guarantees it (the
+    shared edge dims) skips the defensive re-canonicalization distinct.
     """
-    sym = edges.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    ).unionByName(edges.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
-    # orient u -> v when (deg_u, u) < (deg_v, v): total order, so the
-    # oriented graph is acyclic and each triangle has ONE wedge apex
-    du = deg.select(F.col("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("u").alias("v"), F.col("deg").alias("dv"))
-    oriented = (
-        sym.join(du, "u")
-        .join(dv, "v")
-        .filter(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        )
-        .select("u", "v")
-    )
-    # wedges: u -> v, u -> w with v < w (apex u has bounded out-degree)
-    w1 = oriented.select(F.col("u"), F.col("v"))
-    w2 = oriented.select(F.col("u"), F.col("v").alias("w"))
-    wedges = w1.join(w2, "u").filter(F.col("v") < F.col("w"))
-    # close the wedge: (v, w) must be an edge. Wedges already carry
-    # v < w, and the canonical edge set is a < b, so a plain two-key
-    # equi-semi-join closes it (hash join, no expression keys).
-    # assume_canonical (round-6 opt.): the docstring contract is
-    # already "unique (a < b) pairs" — a caller that guarantees it
-    # (the shared edge dims) skips the defensive re-canonicalization
-    # (least/greatest are per-row no-ops, the distinct a wide shuffle).
-    if assume_canonical:
-        canon = edges.select(
-            F.col(a_col).alias("v"), F.col(b_col).alias("w")
-        )
-    else:
-        canon = edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("v"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("w"),
-        ).distinct()
-    tri = wedges.join(canon, ["v", "w"], "left_semi")
-    # credit each corner
-    corners = (
-        tri.select(F.col("u").alias("node"))
-        .unionByName(tri.select(F.col("v").alias("node")))
-        .unionByName(tri.select(F.col("w").alias("node")))
-    )
+    tri = _triangles(_simple_pairs(edges, a_col, b_col, assume_canonical))
+    # one explode, not a three-way union: the enumeration runs once
+    corners = tri.selectExpr("explode(array(u, v, w)) AS node")
     return corners.groupBy("node").agg(F.count("*").alias("n_triangles"))
 
 
@@ -729,69 +763,43 @@ def k_core(
     standard corpus-graph density filter (entity cores, spam rings,
     co-occurrence backbones) next to triangle_counts / clustering.
 
-    Iterative distributed peel: each round computes degrees (algebraic
-    groupBy — map-side partials absorb hubs), keeps nodes with deg ≥
-    k, and induces the surviving edge set via two semi-joins on the
-    SAME node key (one shuffle family end-to-end; AQE shrinks the
-    width as the graph melts). A round removes the ENTIRE sub-k
+    Iterative distributed peel: the state is the directed edge set
+    with each row's source degree attached; a round keeps the rows
+    whose source has degree ≥ k, induces the surviving edge set with
+    one semi-join on the other endpoint, and recounts degrees with a
+    window over the same node key. A round removes the ENTIRE sub-k
     frontier at once, so the round count is the peeling DEPTH of the
     graph, not its node count — single-digit for social/co-occurrence
     topologies (here: 3 rounds at sf0.1); a pathological path graph
     peels O(n) deep, hence the ``max_iter`` guard raising
     ConvergenceError rather than silently returning a non-core
-    (round-1 advice: no silent wrong answers). Lineage is cut per
-    round with localCheckpoint exactly like connected_components.
+    (round-1 advice: no silent wrong answers). The fixpoint probe is
+    one scan for a sub-k degree in the materialized state.
 
     Input: unique undirected (a, b) pairs; self-loops dropped.
-    Returns (node, core_deg) for k-core members, core_deg ≥ k.
+    ``assume_canonical`` (round-6 opt.): a caller guaranteeing unique
+    a < b pairs (which also excludes self-loops) skips the defensive
+    normalization distinct. Returns (u, core_deg) for k-core members,
+    core_deg ≥ k.
     """
-    # assume_canonical (round-6 opt.): a caller guaranteeing unique
-    # a < b pairs (which also excludes self-loops) skips the defensive
-    # normalization distinct; everyone else gets the round-5 path.
-    if assume_canonical:
-        sym = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    else:
-        sym = (
-            edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .select(
-                F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-            )
-            .distinct()
-        )
-    cur = (
-        sym.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(sym.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint(eager=True)
+    def with_degree(e: DataFrame) -> DataFrame:
+        return e.withColumn("core_deg", F.count("*").over(Window.partitionBy("u")))
+
+    def peel(st: DataFrame, _r: int) -> DataFrame:
+        kept = st.filter(F.col("core_deg") >= k)
+        alive = kept.select(F.col("u").alias("v"))
+        return with_degree(kept.join(alive, "v", "left_semi").select("u", "v"))
+
+    core = _supersteps(
+        with_degree(
+            _undirected(edges, a_col, b_col, assume_canonical)
+        ).localCheckpoint(eager=True),
+        peel,
+        max_iter,
+        until=lambda st, _: _is_empty(st.filter(F.col("core_deg") < k)),
+        fixpoint=f"k_core(k={k}) did not converge in {max_iter} rounds",
     )
-    for _ in range(max_iter):
-        # persist: the degree table feeds the convergence probe, both
-        # induction semi-joins, and (on the final round) the returned
-        # result — without it each consumer re-runs the groupBy over
-        # the checkpointed edge state (with the one-job probe below:
-        # measured sf0.1 steady 7.1 → ~5 s). O(nodes) rows per round,
-        # LRU-evicted.
-        deg = cur.groupBy("u").agg(F.count("*").alias("core_deg")).persist()
-        keep = deg.filter(F.col("core_deg") >= k).select("u")
-        # one probe job per round, not two: total and surviving node
-        # counts from a single pass over the degree table
-        n_nodes, n_keep = deg.agg(
-            F.count("*"), F.count_if(F.col("core_deg") >= k)
-        ).first()
-        if n_keep == n_nodes:
-            return deg.orderBy("u")
-        if n_keep == 0:
-            return deg.sparkSession.createDataFrame(
-                [], "u string, core_deg long"
-            )
-        cur = (
-            cur.join(keep, "u", "left_semi")
-            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    raise ConvergenceError(
-        f"k_core(k={k}) did not converge in {max_iter} rounds"
-    )
+    return core.select("u", "core_deg").distinct().orderBy("u")
 
 
 def deterministic_walks(
@@ -837,15 +845,7 @@ def deterministic_walks(
     # measured 3.9s vs 9.8s with a stats-hiding checkpoint at sf0.1)
     # and falls back to a shuffle join at scale. The walker-state
     # persist below stays regardless.
-    sym = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
-        )
-        .distinct()
-        .persist()
-    )
+    sym = _undirected(edges, a_col, b_col).persist()
     origins = (
         starts.select(F.col("node").alias("u")) if starts is not None
         else sym.select("u")
@@ -855,6 +855,9 @@ def deterministic_walks(
     )
     out = state.select("start", F.lit(0).cast("int").alias("step"),
                        F.col("cur").alias("node"))
+    # hand-rolled, not _supersteps: the walker state is persisted, not
+    # cut — a checkpointed state hides the stats that let the planner
+    # broadcast the adjacency (the measurement above)
     for t in range(1, length + 1):
         h = F.conv(
             F.substring(
@@ -907,31 +910,68 @@ def label_propagation(
 
     Returns (node, label) after ``rounds`` rounds.
     """
-    sym = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .unionByName(
-            edges.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = sym.select("u").distinct().select(
-        "u", F.col("u").alias("label")
-    ).localCheckpoint(eager=True)
-    for _ in range(rounds):
+    sym = _undirected(edges, a_col, b_col).persist()
+
+    def lpa_round(labels: DataFrame, _r: int) -> DataFrame:
         neigh = sym.join(
             labels.select(F.col("u").alias("v"), "label"), "v"
         ).select("u", "label")
         counts = neigh.groupBy("u", "label").agg(F.count("*").alias("c"))
         # most-frequent label, ties -> smaller label: min_by over a
         # struct ordered by (-c, label) is a single algebraic agg
-        labels = counts.groupBy("u").agg(
+        return counts.groupBy("u").agg(
             F.min_by("label", F.struct(-F.col("c"), F.col("label"))).alias(
                 "label"
             )
-        ).localCheckpoint(eager=True)
+        )
+
+    labels = sym.select("u").distinct().select("u", F.col("u").alias("label"))
+    labels = _supersteps(labels, lpa_round, rounds)
     return labels.select(F.col("u").alias("node"), "label")
+
+
+def _min_relaxation(
+    e: DataFrame, start: DataFrame, k: int, cand: F.Column, usable: F.Column
+) -> DataFrame:
+    """Frontier-pruned min-relaxation for ≤ ``k`` rounds — the one
+    Bellman-Ford loop behind bounded_sssp and temporal_reachability.
+
+    ``e`` holds edges (es, et, ...) keyed on es; ``start`` holds
+    (node, val). The state is (node, val, fresh): per round the FRESH
+    rows (new or improved last round) join their out-edges, keep the
+    ``usable`` ones (a predicate over the frontier row and the edge),
+    propose ``cand`` (an expression over the same) at et, take the
+    min per node and merge it into the state with least(). The left
+    side of the join is the frontier only, never the full state: on
+    expander-ish graphs the frontier decays after the wave passes a
+    region, so late rounds cost |frontier|·avg-degree, not
+    |V|·avg-degree. Early exit when a round improves nothing. Returns
+    (node, val).
+    """
+
+    def relax(st: DataFrame, _r: int) -> DataFrame:
+        front = st.filter(F.col("fresh"))
+        prop = (
+            front.join(e, front["node"] == e["es"])
+            .filter(usable)
+            .select(F.col("et").alias("node"), cand.alias("nv"))
+            .groupBy("node")
+            .agg(F.min("nv").alias("nv"))
+        )
+        return st.join(prop, "node", "full").select(
+            "node",
+            F.least(
+                F.coalesce(F.col("val"), F.lit(_INF)),
+                F.coalesce(F.col("nv"), F.lit(_INF)),
+            ).alias("val"),
+            (
+                F.col("nv").isNotNull()
+                & (F.col("val").isNull() | (F.col("nv") < F.col("val")))
+            ).alias("fresh"),
+        )
+
+    st = start.withColumn("fresh", F.lit(True))
+    return _supersteps(st, relax, k, until=_frontier_empty).drop("fresh")
 
 
 def bounded_sssp(
@@ -956,15 +996,10 @@ def bounded_sssp(
     non-negative (asserted on the first pass); ties need no break —
     min is total.
 
-    Scale shape: per round ONE equi-join (frontier × edges, hashed on
-    the join key) + ONE groupBy-min — both on the same node key, and
-    the join's left side is the FRONTIER ONLY (nodes whose dist
-    improved last round), never the full dist table: on expander-ish
-    graphs the frontier decays after the wave passes a region, so
-    late rounds cost |frontier|·avg-degree, not |V|·avg-degree.
-    k is a hard bound — rounds are O(k) scheduler steps, each lineage
-    cut with localCheckpoint (the iterative-union recompute trap).
-    Early-exits when the frontier empties.
+    Scale shape: ``_min_relaxation`` with candidate dist + w on every
+    edge — per round ONE frontier × edges equi-join + ONE groupBy-min,
+    both on the same node key. k is a hard bound — rounds are O(k)
+    scheduler steps. Early-exits when the frontier empties.
     """
     if k < 0:
         raise ValueError("k must be >= 0")
@@ -981,44 +1016,18 @@ def bounded_sssp(
         )
         .groupBy("es", "et")
         .agg(F.min("ew").alias("ew"))
-        .localCheckpoint(eager=True)
     )
-    n_bad = e.filter(F.col("ew") < 0).limit(1).count()
-    if n_bad:
+    e = _keyed_checkpoint(e, "es")
+    if not _is_empty(e.filter(F.col("ew") < 0)):
         raise ValueError("bounded_sssp requires non-negative weights")
     dist = (
         sources.select(F.col("node"))
         .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
+        .withColumn("val", F.lit(0).cast("long"))
     )
-    frontier = dist
-    for _ in range(k):
-        cand = (
-            frontier.join(e, frontier["node"] == e["es"])
-            .select(F.col("et").alias("node"), (F.col("dist") + F.col("ew")).alias("nd"))
-            .groupBy("node")
-            .agg(F.min("nd").alias("nd"))
-        )
-        merged = (
-            dist.join(cand, "node", "full")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce(F.col("dist"), F.lit(2**62)),
-                    F.coalesce(F.col("nd"), F.lit(2**62)),
-                ).alias("dist"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # frontier = nodes whose dist changed this round (new or improved)
-        frontier = merged.join(dist, ["node", "dist"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        dist = merged
-        if frontier.limit(1).count() == 0:
-            break
-    return dist
+    return _min_relaxation(
+        e, dist, k, F.col("val") + F.col("ew"), F.lit(True)
+    ).withColumnRenamed("val", "dist")
 
 
 def negative_edge_samples(
@@ -1165,26 +1174,25 @@ def neighborhood_function(
         .unionByName(e.select(F.col("et").alias("node")))
         .distinct()
     )
-    ball = nodes.groupBy("node").agg(
-        F.hll_sketch_agg(F.col("node").cast("string"), F.lit(lg_config_k)).alias("b")
-    ).localCheckpoint(eager=True)
-    for _ in range(k):
+
+    def expand(ball: DataFrame, _r: int) -> DataFrame:
         recv = (
             e.join(ball, e["et"] == ball["node"])
             .select(F.col("es").alias("node"), "b")
             .groupBy("node")
             .agg(F.hll_union_agg("b").alias("nb"))
         )
-        ball = (
-            ball.join(recv, "node", "left")
-            .select(
-                "node",
-                F.when(
-                    F.col("nb").isNull(), F.col("b")
-                ).otherwise(F.hll_union("b", "nb")).alias("b"),
-            )
-            .localCheckpoint(eager=True)
+        return ball.join(recv, "node", "left").select(
+            "node",
+            F.when(F.col("nb").isNull(), F.col("b"))
+            .otherwise(F.hll_union("b", "nb"))
+            .alias("b"),
         )
+
+    ball = nodes.groupBy("node").agg(
+        F.hll_sketch_agg(F.col("node").cast("string"), F.lit(lg_config_k)).alias("b")
+    )
+    ball = _supersteps(ball, expand, k)
     return ball.select(
         "node", F.round(F.hll_sketch_estimate("b")).cast("long").alias("reach_est")
     )
@@ -1212,12 +1220,11 @@ def temporal_reachability(
     X / taint propagation over transcripts and event streams).
 
     Earlier arrival is monotonically at least as good (t ≥ arrival
-    is a superset predicate), so frontier-pruned min-relaxation
-    converges exactly like Bellman-Ford: per round ONE frontier ×
-    edges equi-join (+ the time predicate as a residual filter) and
-    ONE groupBy-min, lineage cut per round, early exit on empty
-    frontier. Edge times are caller-provided integers (micros) —
-    no timestamp arithmetic inside the loop.
+    is a superset predicate), so ``_min_relaxation`` converges exactly
+    like Bellman-Ford: per round ONE frontier × edges equi-join (+ the
+    time predicate as a residual filter) and ONE groupBy-min, early
+    exit on empty frontier. Edge times are caller-provided integers
+    (micros) — no timestamp arithmetic inside the loop.
     """
     if k < 0:
         raise ValueError("k must be >= 0")
@@ -1233,45 +1240,18 @@ def temporal_reachability(
             & F.col("tt").isNotNull()
             & (F.col("es") != F.col("et"))
         )
-        .groupBy("es", "et", "tt")
-        .agg(F.lit(1).alias("_one"))
-        .drop("_one")
+        .distinct()
     )
     # every relaxation round joins e on "es"
     e = _keyed_checkpoint(e, "es")
     arr = (
-        sources.select("node", F.col("t0").cast("long").alias("arrival"))
+        sources.select("node", F.col("t0").cast("long").alias("val"))
         .groupBy("node")
-        .agg(F.min("arrival").alias("arrival"))
-        .localCheckpoint(eager=True)
+        .agg(F.min("val").alias("val"))
     )
-    frontier = arr
-    for _ in range(k):
-        cand = (
-            frontier.join(e, frontier["node"] == e["es"])
-            .filter(F.col("tt") >= F.col("arrival"))
-            .select(F.col("et").alias("node"), F.col("tt").alias("na"))
-            .groupBy("node")
-            .agg(F.min("na").alias("na"))
-        )
-        merged = (
-            arr.join(cand, "node", "full")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce(F.col("arrival"), F.lit(2**62)),
-                    F.coalesce(F.col("na"), F.lit(2**62)),
-                ).alias("arrival"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = merged.join(arr, ["node", "arrival"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        arr = merged
-        if frontier.limit(1).count() == 0:
-            break
-    return arr
+    return _min_relaxation(
+        e, arr, k, F.col("tt"), F.col("tt") >= F.col("val")
+    ).withColumnRenamed("val", "arrival")
 
 
 def functional_scc(
@@ -1302,16 +1282,13 @@ def functional_scc(
 
     Scale: L grows logarithmically (n = 10^12 -> 41 rounds), each
     round ONE equi-join + projection shuffled on the join key — the
-    textbook O(log n)-depth list-ranking trade; lineage cut per round
-    with localCheckpoint exactly like connected_components. The
-    pointer domain must be closed (succ(u) always has a pointer row),
-    which holds by construction for best-match pointers (sharing a
-    shingle is symmetric).
+    textbook O(log n)-depth list-ranking trade. The pointer domain
+    must be closed (succ(u) always has a pointer row), which holds by
+    construction for best-match pointers (sharing a shingle is
+    symmetric).
 
     Returns (node, scc_id, on_cycle), one row per pointer-table node.
     """
-    import math
-
     st = (
         ptr.select(
             F.col(node).alias("node"),
@@ -1332,35 +1309,34 @@ def functional_scc(
             F.lit(True).alias("on_cycle"),
         ).filter(F.lit(False))
     # size the per-round shuffle to the STATE (n rows, fixed across
-    # rounds), exactly like connected_components: a 5k-row state on a
-    # 32-way shuffle is pure task overhead × log2(2n) rounds
-    # (measured 8.0 → 2.6 s on the sf0.1 pointer graph)
-    default_par = ptr.sparkSession.sparkContext.defaultParallelism
-    npart = max(1, min(default_par, n // 20_000 + 1))
-    st = st.repartition(npart, "t").localCheckpoint(eager=True)
-    rounds = max(1, math.ceil(math.log2(2 * n)))
-    for r in range(rounds):
+    # rounds): a 5k-row state on a 32-way shuffle is pure task
+    # overhead × log2(2n) rounds (measured 8.0 → 2.6 s on the sf0.1
+    # pointer graph)
+    npart = _npart(ptr.sparkSession, n)
+
+    def double(st: DataFrame, _r: int) -> DataFrame:
         other = st.select(
             F.col("node").alias("t"),
             F.col("t").alias("t2"),
             F.col("m").alias("m2"),
         )
-        st = (
+        return (
             st.join(other, "t")
-            .select(
-                "node",
-                F.col("t2").alias("t"),
-                F.least("m", "m2").alias("m"),
-            )
+            .select("node", F.col("t2").alias("t"), F.least("m", "m2").alias("m"))
             .repartition(npart, "t")
         )
-        # cut lineage every 3rd round (and at the end): an eager
-        # checkpoint per round pays a full job per doubling, while the
-        # un-cut plan only doubles in depth — 3 self-joins of depth ≤ 8
-        # stay well inside codegen/analysis budgets (measured 3.4 →
-        # 1.9 s for the 14-round sf0.1 loop)
-        if r % 3 == 2 or r == rounds - 1:
-            st = st.localCheckpoint(eager=True)
+
+    # cut lineage every 3rd round: an eager checkpoint per round pays a
+    # full job per doubling, while the un-cut plan only doubles in
+    # depth — 3 self-joins of depth ≤ 8 stay well inside
+    # codegen/analysis budgets (measured 3.4 → 1.9 s for the 14-round
+    # sf0.1 loop)
+    st = _supersteps(
+        st.repartition(npart, "t"),
+        double,
+        max(1, math.ceil(math.log2(2 * n))),
+        cut_every=3,
+    )
     cycle_nodes = st.select(F.col("t").alias("node")).distinct()
     on_cycle = st.join(cycle_nodes, "node", "left_semi").select(
         "node", F.least("node", "m").alias("scc_id"), F.lit(True).alias("on_cycle")
@@ -1384,70 +1360,31 @@ def edge_support(
     are the bridge candidates BETWEEN communities (and the first peel
     of any truss).
 
-    Same degree-orientation doctrine as triangle_counts (each triangle
-    enumerated exactly once at its unique wedge apex, O(sqrt(m)) wedge
-    fan-out on any graph); the difference is the credit step — each
-    triangle credits its three EDGES (canonicalized a < b), then a
-    left join back onto the full edge set fills support 0 for the
+    Same enumeration as triangle_counts (``_triangles``: each triangle
+    once at its unique wedge apex, O(sqrt(m)) wedge fan-out on any
+    graph); the difference is the credit step — each triangle credits
+    its three EDGES (canonicalized a < b), counted in one aggregation
+    together with the full edge set, which fills support 0 for the
     triangle-free edges a corner-credit pass would silently drop.
+    ``assume_canonical``: same contract note as triangle_counts.
     """
-    sym = edges.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    ).unionByName(edges.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
-    du = deg.select(F.col("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("u").alias("v"), F.col("deg").alias("dv"))
-    oriented = (
-        sym.join(du, "u")
-        .join(dv, "v")
-        .filter(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        )
-        .select("u", "v")
+    pairs = _simple_pairs(edges, a_col, b_col, assume_canonical)
+    tri = _triangles(pairs)
+    # one explode, not a three-way union: the enumeration runs once
+    credits = tri.selectExpr(
+        "inline(array("
+        "named_struct('u', least(u, v), 'v', greatest(u, v), 'c', 1),"
+        "named_struct('u', least(u, w), 'v', greatest(u, w), 'c', 1),"
+        "named_struct('u', v, 'v', w, 'c', 1)))"
     )
-    w1 = oriented.select(F.col("u"), F.col("v"))
-    w2 = oriented.select(F.col("u"), F.col("v").alias("w"))
-    wedges = w1.join(w2, "u").filter(F.col("v") < F.col("w"))
-    # assume_canonical (round-6 opt.): same contract note as
-    # triangle_counts — a caller guaranteeing unique a < b pairs skips
-    # the two defensive re-canonicalization distincts.
-    if assume_canonical:
-        canon = edges.select(
-            F.col(a_col).alias("v"), F.col(b_col).alias("w")
-        )
-    else:
-        canon = edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("v"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("w"),
-        ).distinct()
-    tri = wedges.join(canon, ["v", "w"], "left_semi")
-    credits = (
-        tri.select(
-            F.least("u", "v").alias("ea"), F.greatest("u", "v").alias("eb")
-        )
-        .unionByName(
-            tri.select(
-                F.least("u", "w").alias("ea"), F.greatest("u", "w").alias("eb")
-            )
-        )
-        .unionByName(tri.select(F.col("v").alias("ea"), F.col("w").alias("eb")))
-    )
-    sup = credits.groupBy("ea", "eb").agg(F.count("*").alias("support"))
-    if assume_canonical:
-        base = edges.select(
-            F.col(a_col).alias("ea"), F.col(b_col).alias("eb")
-        )
-    else:
-        base = edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("ea"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("eb"),
-        ).distinct()
-    return base.join(sup, ["ea", "eb"], "left").select(
-        F.col("ea").alias(a_col),
-        F.col("eb").alias(b_col),
-        F.coalesce(F.col("support"), F.lit(0)).cast("long").alias("support"),
-        (F.coalesce(F.col("support"), F.lit(0)) == 0).alias("weak_tie"),
+    # one aggregation over every edge (weight 0) and every credit
+    # (weight 1) gives each edge its support, 0 for triangle-free ones
+    return (
+        pairs.withColumn("c", F.lit(0))
+        .unionByName(credits)
+        .groupBy("u", "v")
+        .agg(F.sum("c").cast("long").alias("support"))
+        .selectExpr(f"u AS `{a_col}`", f"v AS `{b_col}`", "support", "support = 0 AS weak_tie")
     )
 
 
@@ -1485,32 +1422,35 @@ def k_betweenness(
 
     Scale shape: the forward pass is bounded_sssp's frontier
     discipline vectorized over sources — state is (source, node,
-    dist, sigma); each of the ≤ k rounds is ONE frontier×edges
-    equi-join + ONE anti-join + ONE algebraic groupBy-sum, lineage
-    cut per round with localCheckpoint. The backward pass re-joins
-    each level to its successor level only (never the full state),
-    ≤ k-1 more rounds. Hot hub nodes land in groupBy SUMs (map-side
-    combinable); the per-source fan-out is |sources|, a constant the
-    caller samples."""
+    sigma, level, fresh); each of the ≤ k rounds is ONE
+    frontier×edges equi-join + ONE anti-join + ONE algebraic
+    groupBy-sum. The backward pass re-joins each level to its
+    successor level only, ≤ k-1 more rounds. Hot hub nodes land in
+    groupBy SUMs (map-side combinable); the per-source fan-out is
+    |sources|, a constant the caller samples.
+
+    ``assume_simple`` (round-6 opt.): a caller that already guarantees
+    a DISTINCT simple edge list with no symmetric (v,u) duplicates
+    (e.g. a deduped bipartite dim whose endpoint namespaces are
+    disjoint) skips the normalization distinct."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).filter(
-        F.col("u").isNotNull()
-        & F.col("v").isNotNull()
-        & (F.col("u") != F.col("v"))
-    )
-    # round-6 opt. (guide §2.2): ``assume_simple`` lets a caller that
-    # already guarantees a DISTINCT simple edge list with no symmetric
-    # (v,u) duplicates (e.g. a deduped bipartite dim whose endpoint
-    # namespaces are disjoint) skip the two full-table wide distincts —
-    # on anything else the exact round-5 normalization runs unchanged.
-    if not assume_simple:
-        e = e.distinct()
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if not assume_simple:
-        und = und.distinct()
     # every forward AND backward round joins und on "u"
-    und = _keyed_checkpoint(und, "u")
+    und = _keyed_checkpoint(_undirected(edges, a_col, b_col, assume_simple), "u")
+
+    def expand(st: DataFrame, r: int) -> DataFrame:
+        front = st.filter(F.col("fresh"))
+        nxt = (
+            front.join(und, front["node"] == und["u"])
+            .select("s", F.col("v").alias("node"), "sigma")
+            .join(st, ["s", "node"], "left_anti")
+            .groupBy("s", "node")
+            .agg(F.sum("sigma").alias("sigma"))
+        )
+        return st.withColumn("fresh", F.lit(False)).unionByName(
+            nxt.select("s", "node", "sigma", F.lit(r).alias("d"), F.lit(True).alias("fresh"))
+        )
+
     l0 = (
         sources.select(F.col("node").alias("s"))
         .distinct()
@@ -1518,49 +1458,24 @@ def k_betweenness(
             "s",
             F.col("s").alias("node"),
             F.lit(1).cast("long").alias("sigma"),
+            F.lit(0).alias("d"),
+            F.lit(True).alias("fresh"),
         )
-        .localCheckpoint(eager=True)
     )
-    levels = [l0]
-    # round-6 opt.: ``assigned`` is a plain union of the already-
-    # checkpointed levels' (s, node) keys — re-checkpointing the
-    # growing union each round materialized the same rows k times; the
-    # anti-join below scans the ≤ k checkpointed leaves instead.
-    assigned = l0.select("s", "node")
-    frontier = l0
-    for _ in range(k):
-        nxt = (
-            frontier.join(und, frontier["node"] == und["u"])
-            .select("s", F.col("v").alias("node"), "sigma")
-            .join(assigned, ["s", "node"], "left_anti")
-            .groupBy("s", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        levels.append(nxt)
-        assigned = assigned.unionByName(nxt.select("s", "node"))
-        frontier = nxt
-    depth = len(levels) - 1
-    all_nodes = und.select(F.col("u").alias("node")).distinct()
+    levels = _supersteps(l0, expand, k, until=_frontier_empty).drop("fresh")
+    depth = levels.agg(F.max("d")).first()[0] or 0
     if depth < 2:
         # no interior nodes possible within the radius
-        return all_nodes.select(
-            "node", F.lit(0).cast("long").alias("bc_micro")
+        return und.select(
+            F.col("u").alias("node"), F.lit(0).cast("long").alias("bc_micro")
         ).limit(0)
-    # round-6 opt.: delta carries the level's sigma alongside
-    # delta_micro, so each backward round joins its successor level
-    # ONCE (on the shared (s, w) grain) instead of separately joining
-    # the level-(d+1) sigma dim and the delta dim — one shuffle join
-    # fewer per round, identical per-edge terms.
-    delta = levels[depth].select(
-        "s", "node", "sigma", F.lit(0).cast("long").alias("delta_micro")
-    )
-    parts = []
-    for d in range(depth - 1, 0, -1):
-        cur = levels[d]
-        dn = delta.select(
+
+    def accumulate(acc: DataFrame, r: int) -> DataFrame:
+        # level d joins its successor level d + 1 ONCE, on the shared
+        # (s, w) grain that carries both sigma_w and delta_micro
+        d = depth - r
+        cur = levels.filter(F.col("d") == d)
+        dn = acc.filter(F.col("d") == d + 1).select(
             "s",
             F.col("node").alias("w"),
             F.col("sigma").alias("sigma_w"),
@@ -1573,35 +1488,94 @@ def k_betweenness(
             .select(
                 "s",
                 "node",
-                F.expr(
-                    "sigma * (1000000 + delta_micro) DIV sigma_w"
-                ).alias("t"),
+                F.expr("sigma * (1000000 + delta_micro) DIV sigma_w").alias("t"),
             )
+            .groupBy("s", "node")
+            .agg(F.sum("t").alias("delta_micro"))
         )
-        delta = (
-            cur.join(
-                contrib.groupBy("s", "node").agg(
-                    F.sum("t").alias("delta_micro")
-                ),
-                ["s", "node"],
-                "left",
-            )
-            .select(
+        return acc.unionByName(
+            cur.join(contrib, ["s", "node"], "left").select(
                 "s",
                 "node",
                 "sigma",
-                F.coalesce("delta_micro", F.lit(0))
-                .cast("long")
-                .alias("delta_micro"),
+                F.coalesce("delta_micro", F.lit(0)).cast("long").alias("delta_micro"),
+                "d",
             )
-            .localCheckpoint(eager=True)
         )
-        parts.append(delta)
-    acc = parts[0].select("s", "node", "delta_micro")
-    for p in parts[1:]:
-        acc = acc.unionByName(p.select("s", "node", "delta_micro"))
-    return acc.groupBy("node").agg(
-        F.sum("delta_micro").cast("long").alias("bc_micro")
+
+    deepest = levels.filter(F.col("d") == depth).select(
+        "s", "node", "sigma", F.lit(0).cast("long").alias("delta_micro"), "d"
+    )
+    acc = _supersteps(deepest, accumulate, depth - 1)
+    return (
+        acc.filter(F.col("d") < depth)
+        .groupBy("node")
+        .agg(F.sum("delta_micro").cast("long").alias("bc_micro"))
+    )
+
+
+def _pr(c: str) -> F.Column:
+    """The portable 48-bit md5 priority of a node id — the random
+    priority of luby_mis and jp_coloring, replayable by a SQL twin."""
+    return (
+        F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 12), 16, 10)
+        .cast("long")
+    )
+
+
+def _priority_state(und: DataFrame, open_col: str, open_type: str) -> DataFrame:
+    """The (node, h, ``open_col``, round) state of luby_mis and
+    jp_coloring: every node of ``und`` with its priority, undecided
+    (``open_col`` and round NULL)."""
+    return und.select(F.col("u").alias("node")).distinct().select(
+        "node",
+        _pr("node").alias("h"),
+        F.lit(None).cast(open_type).alias(open_col),
+        F.lit(None).cast("long").alias("round"),
+    )
+
+
+def _priority_frontier(
+    st: DataFrame, und: DataFrame, open_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The priority-local-minimum frontier among the open nodes of
+    ``st`` (``open_col`` NULL): those whose (h, node) is below every
+    open neighbour's — an independent set, so decisions made for it
+    within one round never conflict. ONE edge pass against the open
+    priorities + ONE algebraic min(struct(h, node)) groupBy; hot hubs
+    sit in the map-side-combinable min(). Returns (frontier (node),
+    live edges (u, v, vh) whose v is open)."""
+    unc = st.filter(F.col(open_col).isNull())
+    live = und.join(
+        unc.select(F.col("node").alias("v"), F.col("h").alias("vh")), "v"
+    )
+    nbr_min = live.groupBy(F.col("u").alias("node")).agg(
+        F.min(F.struct(F.col("vh"), F.col("v"))).alias("nm")
+    )
+    front = (
+        unc.join(nbr_min, "node", "left")
+        .filter(
+            F.col("nm").isNull()
+            | (F.col("h") < F.col("nm.vh"))
+            | ((F.col("h") == F.col("nm.vh")) & (F.col("node") < F.col("nm.v")))
+        )
+        .select("node")
+    )
+    return front, live
+
+
+def _decide(st: DataFrame, batch: DataFrame, open_col: str, r: int) -> DataFrame:
+    """Merge a round's decisions (node, new) into the priority state:
+    an open node takes ``new`` and records round ``r``; decided nodes
+    keep theirs."""
+    return st.join(batch, "node", "left").select(
+        "node",
+        "h",
+        F.coalesce(F.col(open_col), F.col("new")).alias(open_col),
+        F.coalesce(
+            F.col("round"),
+            F.when(F.col("new").isNotNull(), F.lit(r).cast("long")),
+        ).alias("round"),
     )
 
 
@@ -1633,105 +1607,43 @@ def luby_mis(
     status='undecided' — the caller asserts n_undecided == 0 as its
     convergence contract rather than trusting an unbounded loop.
 
-    Per round (bounded_sssp's discipline, lineage cut per round):
-    ONE undecided-semi-joined edge pass + ONE algebraic
-    min(struct(h, node)) groupBy gives each undecided node its
-    minimum undecided-neighbor priority; nodes beating that minimum
-    (or isolated among undecided) enter the MIS; their undecided
-    neighbors leave as excluded. Hot hubs sit in the min() groupBy —
-    map-side combinable, no salting needed.
+    Per round: the priority-local-minimum frontier of the undecided
+    nodes (``_priority_frontier``) enters the MIS; their undecided
+    neighbors leave as excluded. The loop stops early once every node
+    is decided. ``assume_simple``: same contract as k_betweenness.
 
     Returns (node, status ∈ {mis, excluded, undecided}, round —
     the deciding round, or ``rounds`` for undecided)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).filter(
-        F.col("u").isNotNull()
-        & F.col("v").isNotNull()
-        & (F.col("u") != F.col("v"))
-    )
-    # assume_simple (round-6 opt., same contract as k_betweenness): a
-    # caller guaranteeing a distinct simple edge list with no symmetric
-    # duplicates skips the two normalization distincts.
-    if not assume_simple:
-        e = e.distinct()
-    und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if not assume_simple:
-        und = und.distinct()
+    # per-round joins key und on "v" (open priorities)
+    und = _keyed_checkpoint(_undirected(edges, a_col, b_col, assume_simple), "v")
 
-    def _pr(c: str) -> F.Column:
-        return (
-            F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 12), 16, 10)
-            .cast("long")
-        )
-
-    u = (
-        und.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("h", _pr("node"))
-        .localCheckpoint(eager=True)
-    )
-    # round-6 opt. (the k_core peel-state pattern): maintain the LIVE
-    # edge set — edges whose BOTH endpoints are still undecided — as
-    # loop state with the v-side priority attached once, instead of
-    # re-deriving it from the full edge table every round (two
-    # semi-joins + a hash join per round before). Round r's live set
-    # is exactly {(u,v) ∈ und : u,v undecided at round r} by
-    # induction (newly-decided endpoints are anti-joined out below),
-    # so nbr_min — and every downstream decision — is value-identical
-    # to the round-5 formulation; the state SHRINKS as rounds decide
-    # nodes (Luby decides the bulk in round 1).
-    live = und.join(
-        u.select(F.col("node").alias("v"), F.col("h").alias("vh")), "v"
-    ).localCheckpoint(eager=True)
-    decided = None
-    for r in range(1, rounds + 1):
-        nbr_min = live.groupBy(F.col("u").alias("node")).agg(
-            F.min(F.struct(F.col("vh"), F.col("v"))).alias("nm")
-        )
-        mis_new = (
-            u.join(nbr_min, "node", "left")
-            .filter(
-                F.col("nm").isNull()
-                | (F.col("h") < F.col("nm.vh"))
-                | ((F.col("h") == F.col("nm.vh")) & (F.col("node") < F.col("nm.v")))
-            )
-            .select("node")
-            .localCheckpoint(eager=True)
-        )
-        excl_new = (
-            live.join(mis_new.select(F.col("node").alias("u")), "u", "left_semi")
+    def luby_round(st: DataFrame, r: int) -> DataFrame:
+        mis, live = _priority_frontier(st, und, "status")
+        # an MIS node's open neighbours are never MIS themselves (two
+        # adjacent open nodes cannot both be priority minima)
+        excl = (
+            live.join(mis.select(F.col("node").alias("u")), "u", "left_semi")
             .select(F.col("v").alias("node"))
             .distinct()
-            .join(mis_new, "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        batch = mis_new.select(
-            "node", F.lit("mis").alias("status"), F.lit(r).alias("round")
-        ).unionByName(
-            excl_new.select(
-                "node", F.lit("excluded").alias("status"), F.lit(r).alias("round")
-            )
+        batch = mis.withColumn("new", F.lit("mis")).unionByName(
+            excl.withColumn("new", F.lit("excluded"))
         )
-        decided = batch if decided is None else decided.unionByName(batch)
-        dec = mis_new.unionByName(excl_new)
-        u = u.join(dec, "node", "left_anti").localCheckpoint(eager=True)
-        if u.limit(1).count() == 0:
-            break
-        if r < rounds:
-            live = (
-                live.join(dec.select(F.col("node").alias("u")), "u", "left_anti")
-                .join(dec.select(F.col("node").alias("v")), "v", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-    out = decided.unionByName(
-        u.select(
-            "node",
-            F.lit("undecided").alias("status"),
-            F.lit(rounds).alias("round"),
-        )
+        return _decide(st, batch, "status", r)
+
+    st = _supersteps(
+        _priority_state(und, "status", "string"),
+        luby_round,
+        rounds,
+        until=lambda st, _: _is_empty(st.filter(F.col("status").isNull())),
     )
-    return out.select("node", "status", F.col("round").cast("long").alias("round"))
+    return st.select(
+        "node",
+        F.coalesce(F.col("status"), F.lit("undecided")).alias("status"),
+        F.coalesce(F.col("round"), F.lit(rounds)).cast("long").alias("round"),
+    )
 
 
 def wl_refinement(
@@ -1739,7 +1651,6 @@ def wl_refinement(
     rounds: int = 3,
     a_col: str = "a",
     b_col: str = "b",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Weisfeiler-Leman COLOR REFINEMENT (1-WL; Weisfeiler & Leman
     1968, the canonical-form/graph-isomorphism primitive and the
@@ -1783,35 +1694,17 @@ def wl_refinement(
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     p = 2147483647
-    e = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .distinct()
-    )
     nbr = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
+        _undirected(edges, a_col, b_col)
         .select(F.col("u").alias("node"), F.col("v").alias("nb"))
         .localCheckpoint(eager=True)
     )
     deg = nbr.groupBy("node").agg(F.count("*").cast("long").alias("degree"))
-    deg_dim = global_rank(
-        deg.select("degree").distinct(),
-        ["degree"],
-        out_col="code",
-        num_partitions=num_partitions,
-    )
-    out = deg.join(deg_dim, "degree").select(
-        "node", "degree", F.col("code").alias("c0")
-    )
-    labels = out.select("node", F.col("c0").alias("code")).localCheckpoint(
-        eager=True
-    )
-    for r in range(1, rounds + 1):
+    deg_dim = global_rank(deg.select("degree").distinct(), ["degree"], out_col="code")
+    keys = ["own", "d", "s1", "s2", "s3"]
+
+    def refine(out: DataFrame, r: int) -> DataFrame:
+        labels = out.select("node", F.col(f"c{r - 1}").alias("code"))
         sig = (
             nbr.join(
                 labels.select(F.col("node").alias("nb"), F.col("code").alias("nc")),
@@ -1830,21 +1723,16 @@ def wl_refinement(
         tup = labels.join(sig, "node").select(
             "node", F.col("code").alias("own"), "d", "s1", "s2", "s3"
         )
-        dim = global_rank(
-            tup.select("own", "d", "s1", "s2", "s3").distinct(),
-            ["own", "d", "s1", "s2", "s3"],
-            out_col="code",
-            num_partitions=num_partitions,
+        dim = global_rank(tup.select(*keys).distinct(), keys, out_col="code")
+        return out.join(
+            tup.join(dim, keys).select("node", F.col("code").alias(f"c{r}")),
+            "node",
         )
-        labels = (
-            tup.join(dim, ["own", "d", "s1", "s2", "s3"])
-            .select("node", "code")
-            .localCheckpoint(eager=True)
-        )
-        out = out.join(
-            labels.select("node", F.col("code").alias(f"c{r}")), "node"
-        )
-    return out
+
+    out = deg.join(deg_dim, "degree").select(
+        "node", "degree", F.col("code").alias("c0")
+    )
+    return _supersteps(out, refine, rounds)
 
 
 def jp_coloring(
@@ -1852,7 +1740,6 @@ def jp_coloring(
     rounds: int = 24,
     a_col: str = "a",
     b_col: str = "b",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Deterministic Jones-Plassmann GREEDY GRAPH COLORING (Jones &
     Plassmann 1993) — the full-partition complement of luby_mis: where
@@ -1866,100 +1753,38 @@ def jp_coloring(
     48-bit-md5 hash of the node id with the node id as tie-break, so
     rounds replay identically under retry and an unrolled SQL twin
     reproduces every color bit-for-bit. Fixed-round semantics (the
-    luby_mis precedent): the full ``rounds`` budget always runs (a
-    converged graph makes the tail rounds no-op plan segments, and the
-    SQL twin unrolls the same budget with empty CTEs); nodes still
-    uncolored after ``rounds`` return status='uncolored' and the
-    caller asserts none exist.
+    luby_mis precedent): nodes still uncolored after ``rounds`` return
+    status='uncolored' and the caller asserts none exist; once every
+    node is colored the remaining budget rounds would be exact no-ops
+    (empty frontier), so the loop stops early with identical output.
 
-    Per round, ONE state DataFrame (node, h, color, round) is rebuilt;
-    lineage is cut every ``checkpoint_every`` rounds (default every
-    round: the state is referenced three times per round — frontier,
-    used-colors, merge-back — so an unmaterialized round TRIPLES the
-    plan subtree and two deferred rounds already blow the optimizer
-    budget; synchronous JP rounds are inherently sequential, ~14-16 on
-    a kNN-5 graph with 48-bit hash priorities, and one job barrier per
-    round is the honest price of that dependency chain): the
-    priority-local-minima frontier among uncolored nodes (an
-    independent set — within-round assignments can never conflict)
-    takes the MINIMUM EXCLUDANT of its already-colored neighbors'
-    colors, computed relationally: explode(sequence(0, n_used))
-    candidates anti-joined against the used set, min per node — never
-    a per-node Python loop; candidate fan-out bounded by the colored
-    degree ≤ Δ. Hot hubs sit in map-side-combinable min()/count()
-    aggregates.
+    Per round, ONE state DataFrame (node, h, color, round) is rebuilt
+    and cut (the state is referenced three times per round —
+    frontier, used-colors, merge-back — so an unmaterialized round
+    TRIPLES the plan subtree; synchronous JP rounds are inherently
+    sequential, ~14-16 on a kNN-5 graph with 48-bit hash priorities,
+    and one job barrier per round is the honest price of that
+    dependency chain): the priority-local-minima frontier among
+    uncolored nodes (``_priority_frontier``) takes the MINIMUM
+    EXCLUDANT of its already-colored neighbors' colors, computed
+    relationally — never a per-node Python loop. Hot hubs sit in
+    map-side-combinable aggregates.
 
     Returns (node, color, round, status ∈ {colored, uncolored});
     color/round are NULL for uncolored leftovers."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .distinct()
-    )
-    und = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-    )
     # per-round joins key und on "v" (uncolored priorities, colored
     # neighbor colors); the "u"-keyed accesses broadcast
-    und = _keyed_checkpoint(und, "v")
+    und = _keyed_checkpoint(_undirected(edges, a_col, b_col), "v")
 
-    def _pr(c: str) -> F.Column:
-        return (
-            F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 12), 16, 10)
-            .cast("long")
-        )
-
-    st = (
-        und.select(F.col("u").alias("node"))
-        .distinct()
-        .select(
-            "node",
-            _pr("node").alias("h"),
-            F.lit(None).cast("long").alias("color"),
-            F.lit(None).cast("long").alias("round"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for r in range(1, rounds + 1):
-        unc = st.filter(F.col("color").isNull()).select("node", "h")
-        nbr_min = (
-            und.join(
-                unc.select(F.col("node").alias("v"), F.col("h").alias("vh")),
-                "v",
-            )
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min(F.struct(F.col("vh"), F.col("v"))).alias("nm"))
-        )
-        front = (
-            unc.join(nbr_min, "node", "left")
-            .filter(
-                F.col("nm").isNull()
-                | (F.col("h") < F.col("nm.vh"))
-                | (
-                    (F.col("h") == F.col("nm.vh"))
-                    & (F.col("node") < F.col("nm.v"))
-                )
-            )
-            .select("node")
-        )
-        # mex via array algebra (round-6 optimization): one
-        # collect_set aggregate replaces the old distinct +
-        # count-groupBy + explode(sequence) anti-join + min-groupBy
-        # (3 exchanges per round → 1). Equivalence: collect_set dedups
-        # exactly like the old distinct, size(used) == the old n_used
-        # (count of DISTINCT used colors), and
-        # array_min(array_except(sequence(0, n), used)) is the same
-        # minimum excludant the anti-join computed — sequence has n+1
-        # candidates vs n used colors, so a mex always exists. The
-        # per-node array is bounded by the colored degree ≤ Δ, the
-        # same bound the old explode fan-out had.
+    def jp_round(st: DataFrame, r: int) -> DataFrame:
+        front, _ = _priority_frontier(st, und, "color")
+        # mex via array algebra (round-6 optimization): one collect_set
+        # aggregate of the distinct used colors, then
+        # array_min(array_except(sequence(0, n_used), used)) — n_used+1
+        # candidates vs n_used used colors, so a mex always exists. The
+        # per-node array is bounded by the colored degree ≤ Δ.
         used_sets = (
             und.join(front.select(F.col("node").alias("u")), "u", "left_semi")
             .join(
@@ -1971,42 +1796,22 @@ def jp_coloring(
             .groupBy(F.col("u").alias("node"))
             .agg(F.collect_set("color").alias("used"))
         )
-        assign = (
-            front.join(used_sets, "node", "left")
-            .select(
-                "node",
-                F.expr(
-                    "coalesce(array_min(array_except("
-                    " sequence(0L, CAST(coalesce(size(used), 0) AS BIGINT)),"
-                    " coalesce(used, CAST(array() AS ARRAY<BIGINT>)))), 0L)"
-                ).cast("long").alias("new_color"),
-            )
+        assign = front.join(used_sets, "node", "left").select(
+            "node",
+            F.expr(
+                "coalesce(array_min(array_except("
+                " sequence(0L, CAST(coalesce(size(used), 0) AS BIGINT)),"
+                " coalesce(used, CAST(array() AS ARRAY<BIGINT>)))), 0L)"
+            ).cast("long").alias("new"),
         )
-        st = (
-            st.join(assign, "node", "left")
-            .select(
-                "node",
-                "h",
-                F.coalesce(F.col("color"), F.col("new_color")).alias("color"),
-                F.coalesce(
-                    F.col("round"),
-                    F.when(
-                        F.col("new_color").isNotNull(), F.lit(r).cast("long")
-                    ),
-                ).alias("round"),
-            )
-        )
-        if r % checkpoint_every == 0 or r == rounds:
-            st = st.localCheckpoint(eager=True)
-            # early exit (round-6 optimization): once every node is
-            # colored the remaining budget rounds are exact no-ops
-            # (empty frontier, st unchanged) — skip them. Output is
-            # identical; only dead work is avoided. The check is one
-            # tiny job over the just-materialized state.
-            if r < rounds and (
-                st.filter(F.col("color").isNull()).limit(1).count() == 0
-            ):
-                break
+        return _decide(st, assign, "color", r)
+
+    st = _supersteps(
+        _priority_state(und, "color", "long"),
+        jp_round,
+        rounds,
+        until=lambda st, _: _is_empty(st.filter(F.col("color").isNull())),
+    )
     return st.select(
         "node",
         "color",

@@ -25,6 +25,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,8 +111,15 @@ def _parquet_file_counts(root: str) -> dict[str, int]:
 
 
 # suffixes of a table dir mid-swap: <table>.tmp is a new copy being
-# written, <table>.old the parked previous copy (see _swap_dir)
-_TMP, _OLD = ".tmp", ".old"
+# written, <table>.old the parked previous copy (see _swap_dir), and
+# <table>.parked holds parked partition dirs, one entry per dir named
+# by its quoted relative path (see Pipeline._replace_partition_dirs)
+_TMP, _OLD, _PARKED = ".tmp", ".old", ".parked"
+
+
+def _move(src: str, dst: str) -> None:
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.replace(src, dst)
 
 
 def _swap_dir(new: str, final: str) -> None:
@@ -529,16 +537,25 @@ class Pipeline:
         """Copy-on-write commit: swap only the named partition dirs of a
         table (the parquet emulation of Iceberg MERGE rewriting only
         affected data files). A missing dir in tmp means the partition
-        became empty — the old dir is still removed."""
+        became empty — the old dir is still removed.
+
+        Each old dir is parked in ``<table>.parked`` (outside every
+        table scan) before its rewrite moves in, and deleted only after
+        that move: a crash in between leaves the partition's only copy
+        parked, and ``_sweep`` moves it back, so the retry still finds
+        the unchanged conversations' rows it must carry over."""
         tmp, final = self._path(tmp_name), self._path(final_name)
+        parked = final + _PARKED
         for rel in rel_dirs:
             dst = os.path.join(final, rel)
             src = os.path.join(tmp, rel)
+            old = os.path.join(parked, quote(rel, safe=""))
             if os.path.exists(dst):
-                shutil.rmtree(dst)
+                _move(dst, old)
             if os.path.exists(src):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
+                _move(src, dst)
+            shutil.rmtree(old, ignore_errors=True)
+        shutil.rmtree(parked, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
 
     def _write_tmp(self, df: DataFrame, name: str, table: str) -> str:
@@ -1002,7 +1019,9 @@ class Pipeline:
         the store: a parked ``<t>.old`` whose table is missing IS the
         table (crash between the two renames of ``_swap_dir``) and is
         moved back; otherwise it is a stale copy and is deleted, as is
-        every half-written ``<t>.tmp``."""
+        every half-written ``<t>.tmp``. Likewise each partition dir
+        parked in ``<t>.parked`` whose place in the table is empty is
+        moved back (crash inside ``_replace_partition_dirs``)."""
         for entry in os.listdir(self.out_dir):
             path = self._path(entry)
             if entry.endswith(_OLD):
@@ -1011,6 +1030,13 @@ class Pipeline:
                     shutil.rmtree(path)
                 else:
                     os.replace(path, table)
+            elif entry.endswith(_PARKED):
+                table = path[: -len(_PARKED)]
+                for name in os.listdir(path):
+                    dst = os.path.join(table, unquote(name))
+                    if not os.path.exists(dst):
+                        _move(os.path.join(path, name), dst)
+                shutil.rmtree(path)
             elif entry.endswith(_TMP):
                 shutil.rmtree(path)
 

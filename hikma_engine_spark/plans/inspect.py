@@ -2,8 +2,8 @@
 made assertable.
 
 These let tests (and humans) verify the plans Catalyst actually picked:
-filters reached the parquet scan, the small side went broadcast, a
-stage stayed inside whole-stage codegen, no accidental cartesian.
+projections reached the parquet scan, the small side went broadcast, no
+accidental cartesian, no shuffle beyond the expected ones.
 """
 
 from __future__ import annotations
@@ -19,18 +19,6 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     with redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
-
-
-def pushed_filters(df: DataFrame) -> str:
-    """The PushedFilters section of every scan in the plan."""
-    plan = physical_plan(df)
-    return "\n".join(
-        line.strip() for line in plan.splitlines() if "PushedFilters" in line
-    )
-
-
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    return fragment in pushed_filters(df)
 
 
 def read_schema(df: DataFrame) -> str:

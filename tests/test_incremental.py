@@ -362,6 +362,53 @@ def test_incremental_retry_after_failed_final_swap(
         assert _digest(p_retry._read(table)) == _digest(p_full._read(table))
 
 
+def test_incremental_retry_after_failed_partition_move(
+    spark, tiny_path, tmp_path, monkeypatch
+):
+    """The copy-on-write commit moves each rewritten bucket dir into
+    place. If moving one mentions bucket fails, the unchanged
+    conversations in that bucket must survive: the retry re-detects the
+    same delta and ends digest-equal to a full rebuild (the old bucket
+    dir was parked, not deleted, before the move)."""
+    import os
+
+    import pytest as _pytest
+
+    v1 = pd.read_parquet(tiny_path)
+    extra = v1[v1.conv_id == "c1"].tail(1).copy()
+    extra["turn_idx"] = extra["turn_idx"] + 1
+    extra["text"] = "postgres depends on redis now"
+    v2_path = str(tmp_path / "part_v2.parquet")
+    _concat_like(v1, extra).to_parquet(
+        v2_path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
+    )
+    # one bucket: the changed c1 shares it with the unchanged c2
+    out = str(tmp_path / "part_crash")
+    Pipeline(spark, tiny_path, out, run_id="v1", n_buckets=1).run(resume=False)
+
+    real_replace = os.replace
+
+    def failing_replace(src, dst):
+        if os.path.basename(os.path.dirname(src)) == "mentions_incr":
+            raise OSError("injected failure moving a mentions bucket")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with _pytest.raises(OSError, match="injected failure"):
+        Pipeline(spark, v2_path, out, run_id="crashed", n_buckets=1).run_incremental()
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    p_retry = Pipeline(spark, v2_path, out, run_id="retry", n_buckets=1)
+    res = p_retry.run_incremental()
+    assert res.phase_stats["discover"]["changed_convs"] == 1
+
+    full_out = str(tmp_path / "part_full")
+    p_full = Pipeline(spark, v2_path, full_out, run_id="full", n_buckets=1)
+    p_full.run(resume=False)
+    for table in ("mentions", "nodes", "edges", "conversations"):
+        assert _digest(p_retry._read(table)) == _digest(p_full._read(table))
+
+
 def test_deleted_without_delta_raises(spark, corpus_path, tmp_path):
     """ADVICE r2: an explicit deletion list is only honored by delta
     mode — content-hash mode must reject it loudly, not drop it."""

@@ -6,13 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hikma_engine_spark.plans import inspect
-from hikma_engine_spark.sources import transcripts as src
 from hikma_engine_spark.stages import extract, link
-
-
-def test_scan_filter_pushdown(spark, corpus_path):
-    df = src.read_transcripts(spark, corpus_path, conv_prefix_filter="conv0000001")
-    assert inspect.has_pushed_filter(df, "StringStartsWith(conv_id,conv0000001)")
 
 
 def test_scan_column_pruning(spark, corpus_path):

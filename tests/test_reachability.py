@@ -35,10 +35,6 @@ UNREACHED_OK = {
     f"{PKG}.streaming.ingest": "optional streaming layer",
     # assertable explain() helpers for tests/test_plans.py
     f"{PKG}.plans.inspect": "plan assertions used by the plan tests",
-    # schema-enforced scan behind the Iceberg gate; Pipeline.transcripts
-    # reads parquet directly, and routing it through here would change
-    # the scan (declared schema, 1 MB turn cap) — pinned by test_plans
-    f"{PKG}.sources.transcripts": "catalog-shaped transcript scan",
 }
 
 
