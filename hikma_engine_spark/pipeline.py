@@ -24,14 +24,22 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .extraction import KIND_DEPENDS
 from .splits import effective_scan_splits
 from .stages import discover, extract, link, materialize
+from .stages.materialize import (
+    GLOBAL_EDGE_TYPES,
+    GLOBAL_NODE_TYPES,
+    PER_CONV_EDGE_TYPES,
+    PER_CONV_NODE_TYPES,
+)
 
 PHASES = ("discover", "extract", "link", "materialize")
 
@@ -56,13 +64,8 @@ _PARTITION_BY_BUCKETED = {
     "nodes": ["node_type", "bucket"],
     "edges": ["edge_type", "bucket"],
 }
-_BUCKETED = ("mentions", "nodes", "edges")
-# node/edge types keyed by conv_id (bucket-surgical); the rest are
-# small global dims rewritten wholesale on incremental runs
-_PER_CONV_NODE_TYPES = ("Turn", "Mention")
-_GLOBAL_NODE_TYPES = ("Conversation", "Entity", "Tool")
-_PER_CONV_EDGE_TYPES = ("IN_CONV", "IN_TURN", "REFERS_TO", "MENTIONS", "INVOKES")
-_GLOBAL_EDGE_TYPES = ("DEPENDS_ON", "SAME_AS")
+# the global node types are small: at most this many files per type
+_GLOBAL_DIM_FILES = 8
 
 
 def bucket_col(n_buckets: int) -> F.Column:
@@ -93,8 +96,6 @@ def _parquet_file_counts(root: str) -> dict[str, int]:
     so partitionBy dirs (node_type=.../) stay visible in the lineage.
     Footers are read with a thread pool — bucketed tables have hundreds
     of files and a serial walk costs seconds per write."""
-    from concurrent.futures import ThreadPoolExecutor
-
     import pyarrow.parquet as pq
 
     paths = [
@@ -214,7 +215,7 @@ class Pipeline:
         )
         os.makedirs(out_dir, exist_ok=True)
         self.state = StateStore(out_dir)
-        self._needs_rebalance: bool | None = None
+        self._needs_rebalance: dict[str, bool] = {}
 
     # ---- IO helpers ----
     def _path(self, name: str) -> str:
@@ -224,16 +225,17 @@ class Pipeline:
         p = self._path(name)
         return os.path.exists(os.path.join(p, "_SUCCESS"))
 
-    def _write(self, df: DataFrame, name: str) -> dict:
+    def _write(self, df: DataFrame, name: str, reject=None) -> dict:
         """Atomic parquet write + per-partition lineage counts.
 
         Lineage counts are computed from the *written files* (cheap
         metadata-only scan), not from the input plan — counting the
         plan itself would re-execute every upstream UDF a second time.
+        ``reject(written)`` may return an error message: the new copy is
+        then dropped and the committed table is left as it was.
         """
         tmp = self._path(name) + _TMP
         final = self._path(name)
-        df = self._prep_for_write(df, name)
         writer = df.write.mode("overwrite")
         if name in self.partition_by:
             writer = writer.partitionBy(*self.partition_by[name])
@@ -242,6 +244,10 @@ class Pipeline:
             # a partitioned write of zero rows emits no files at all —
             # rewrite unpartitioned so the table keeps a readable schema
             df.limit(0).write.mode("overwrite").parquet(tmp)
+        error = reject and reject(self.spark.read.parquet(tmp))
+        if error:
+            shutil.rmtree(tmp)
+            raise ValueError(error)
         _swap_dir(tmp, final)
         per_part = _parquet_file_counts(final)
         return {
@@ -250,14 +256,35 @@ class Pipeline:
             "per_partition": per_part,
         }
 
-    def _prep_for_write(self, df: DataFrame, name: str) -> DataFrame:
-        """In bucketed layout, bucketed tables get the conv-hash bucket
-        column and are repartitioned so each task owns whole buckets
-        (bounds file count: one file per (partition values × bucket))."""
-        if self.n_buckets and name in _BUCKETED and "bucket" not in df.columns:
-            df = df.withColumn("bucket", bucket_col(self.n_buckets))
-            df = df.repartition(self.n_buckets, "bucket")
-        return df
+    def _write_dim(self, df: DataFrame, name: str) -> dict:
+        """Conversations-dim write that refuses duplicate (conv_id,
+        turn_idx) keys (n_turns vs distinct turn_idx count: one bounded
+        job over the written files, never the dim in driver memory)."""
+
+        def reject(dim: DataFrame) -> str | None:
+            if dim.filter(F.col("n_turns") != F.col("n_distinct_turns")).limit(1).count():
+                return (
+                    "duplicate (conv_id, turn_idx) keys in the input — a "
+                    "delta_path must hold the FULL deduplicated row set of "
+                    "each changed conversation"
+                )
+            return None
+
+        return self._write(df, name, reject)
+
+    def _bucketed(self, df: DataFrame, files: int | None = None) -> DataFrame:
+        """The store layout's shaping of a table or of a branch of one;
+        the unbucketed layout leaves ``df`` as it is. Bucketed: the
+        conv-hash ``bucket`` column, after a hash shuffle on it into
+        ``files`` partitions (at most n_buckets) when given — each task
+        owns whole buckets, which bounds the file count at one per
+        (partition values × bucket)."""
+        if not self.n_buckets:
+            return df
+        bucket = bucket_col(self.n_buckets)
+        if files:
+            df = df.repartition(min(files, self.n_buckets), bucket)
+        return df.withColumn("bucket", bucket)
 
     def _read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self._path(name))
@@ -284,8 +311,11 @@ class Pipeline:
         return f"{mt_ns}:{len(stats)}:{sum(st.st_size for st in stats)}"
 
     # ---- phase bodies ----
-    def transcripts(self, keys: tuple[str, ...] = ("conv_id", "turn_idx")) -> DataFrame:
-        """Input scan, rebalanced for the UDF-heavy stages.
+    def transcripts(
+        self, keys: tuple[str, ...] = ("conv_id", "turn_idx"), path: str | None = None
+    ) -> DataFrame:
+        """Input scan (``transcripts_path``, or a delta's ``path``),
+        rebalanced for the UDF-heavy stages.
 
         Small local corpora arrive as a single parquet split; the
         extraction/embedding pandas UDFs are CPU-bound per row, so a
@@ -305,36 +335,23 @@ class Pipeline:
         row in one task — the round-2 guard was fooled exactly this way
         and serialized the whole extract+embed path on one core.
         """
-        df = self.spark.read.parquet(self.transcripts_path)
+        path = path or self.transcripts_path
+        df = self.spark.read.parquet(path)
         target = self.spark.sparkContext.defaultParallelism
-        if self._needs_rebalance is None:
-            # decided once per Pipeline instance: the probe costs one
-            # tiny job (DF→RDD conversion) and every phase calls
-            # transcripts() — the input path cannot change under a run
+        if path not in self._needs_rebalance:
+            # decided once per Pipeline instance and path: the probe
+            # costs one tiny job (DF→RDD conversion) and every phase
+            # calls transcripts() — the input cannot change under a run
             # (the watermark guard recomputes stale phases anyway)
-            self._needs_rebalance = effective_scan_splits(df, target) < target
-        if self._needs_rebalance:
+            self._needs_rebalance[path] = effective_scan_splits(df, target) < target
+        if self._needs_rebalance[path]:
             df = df.repartition(target, *keys)
         return df
 
     def _run_discover(self) -> dict:
         t = self.transcripts(keys=("conv_id",))
-        stats = {"conversations": self._write(discover.conversations_dim(t), "conversations")}
-        # duplicate-key validation from the written dim (n_turns vs
-        # distinct turn_idx count). Spark-side: one metadata-cheap job
-        # over the just-written parquet — never the whole dim in driver
-        # memory (at 100x the dim is billions of rows).
-        n_bad = (
-            self._read("conversations")
-            .filter(F.col("n_turns") != F.col("n_distinct_turns"))
-            .limit(1)
-            .count()
-        )
-        if n_bad:
-            raise ValueError(
-                "duplicate (conv_id, turn_idx) keys detected in conversations dim"
-            )
-        return stats
+        dim = discover.conversations_dim(t)
+        return {"conversations": self._write_dim(dim, "conversations")}
 
     def _run_extract(self) -> dict:
         """Mention detection (the expensive UDF pass) is the extract
@@ -342,9 +359,8 @@ class Pipeline:
         projection over it and is folded into materialize — writing the
         triple set twice (triples + edges) would double the pipeline's
         largest IO volume for no resume benefit."""
-        t = self.transcripts()
-        mentions = extract.extract_mentions(t)
-        return {"mentions": self._write(mentions, "mentions")}
+        mentions = extract.extract_mentions(self.transcripts())
+        return {"mentions": self._write(self._bucketed(mentions, self.n_buckets), "mentions")}
 
     def _run_link(self) -> dict:
         mentions = self._read("mentions")
@@ -354,79 +370,39 @@ class Pipeline:
         return stats
 
     def _run_materialize(self) -> dict:
+        """Edges and nodes, written as two INDEPENDENT jobs submitted
+        from two threads (supported by the Spark scheduler; on a cluster,
+        concurrent jobs fill executor gaps the other job's stage tails
+        leave). Nothing in the node build reads the edges table: the Tool
+        id dim comes from the source columns."""
         t = self.transcripts()
-        mentions = self._read("mentions")
-        triples = extract.assemble_triples(t, mentions)
-        edges = materialize.build_edges(triples, self._read("same_as"))
-        # Node build, branch by branch so each pays only its own cost:
-        # - Turn nodes: bucket-shuffle the COMPACT text rows first, embed
-        #   post-shuffle (vectors never cross the exchange), one branch-
-        #   level UDF — a when()-guarded UDF over the full union would
-        #   still evaluate on every row (Spark extracts pandas UDFs into
-        #   an unconditional projection)
-        # - Mention nodes: reuse the bucket lineage of the mentions scan
-        # - Global dims (Conversation/Entity/Tool): tiny; one small
-        #   shuffle bounds their output file count
-        if not self.n_buckets:
-            # unbucketed layout: single build, embeddings inline, no
-            # pre-write shuffle — and the edges/nodes writes are two
-            # INDEPENDENT jobs submitted from two threads (supported by
-            # the Spark scheduler; on a cluster, concurrent jobs fill
-            # executor gaps the other job's stage tails leave). Tool
-            # nodes read the in-memory INVOKES triple slice instead of
-            # the written edges table precisely to break the only
-            # edges→nodes dependency; the slice recompute is paid inside
-            # the overlapped wall time, which is cheaper than a serial
-            # edges-commit barrier at every parallelism level measured.
-            nodes = materialize.build_nodes(
-                t,
-                self._read("conversations"),
-                mentions,
-                None,
-                self._read("links"),
-                tool_ids=materialize.tool_source_ids(t, mentions),
-            )
-            from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-            with ThreadPoolExecutor(2) as pool:
-                f_edges = pool.submit(self._write, edges, "edges")
-                f_nodes = pool.submit(self._write, nodes, "nodes")
-                stats = {"edges": f_edges.result(), "nodes": f_nodes.result()}
-        else:
-            # bucketed layout keeps the sequential edges-then-nodes order
-            # (the incremental COW machinery depends on committed edges)
-            stats = {"edges": self._write(edges, "edges")}
-            from .functions.embeddings import embed_udf  # noqa: PLC0415
-            from .stages.materialize import _NODE_COLS  # noqa: PLC0415
-
-            bcol = bucket_col(self.n_buckets)
-            links_df = self._read("links")
-            edges_df = self._read("edges")
-            turn_b = (
-                materialize.turn_nodes(t, embed=False)
-                .withColumn("bucket", bcol)
-                .repartition(self.n_buckets, "bucket")
-                .withColumn("embedding", embed_udf(F.col("source_text")))
-            )
-            mention_b = materialize.mention_nodes(mentions, links_df).withColumn(
-                "bucket", bcol
-            )
-            glob = (
-                materialize.conversation_nodes(self._read("conversations"))
-                .unionByName(
-                    materialize.entity_nodes(links_df, mentions, embed=True)
-                )
-                .unionByName(materialize.tool_nodes(edges_df))
-                .withColumn("bucket", bcol)
-                .repartition(min(self.n_buckets, 8), "bucket")
-            )
-            cols = [*_NODE_COLS, "bucket"]
-            nodes = (
-                turn_b.select(*cols)
-                .unionByName(mention_b.select(*cols))
-                .unionByName(glob.select(*cols))
-            )
-            stats["nodes"] = self._write(nodes, "nodes")
+        mentions, links = self._read("mentions"), self._read("links")
+        # triple assembly is narrow and UDF-free, so it reads the input
+        # without the rebalance shuffle the embedding branch needs
+        triples = extract.assemble_triples(
+            self.spark.read.parquet(self.transcripts_path), mentions
+        )
+        edges = self._bucketed(
+            materialize.build_edges(triples, self._read("same_as")), self.n_buckets
+        )
+        # Turn rows embed after the layout's shuffle, so vectors never
+        # cross an exchange; Mention rows keep the mentions scan's lineage
+        per_conv = materialize.per_conv_nodes(
+            self._bucketed(t, self.n_buckets), mentions, links
+        )
+        global_ = materialize.global_nodes(
+            self._read("conversations"),
+            links,
+            mentions,
+            materialize.tool_source_ids(t, mentions),
+        )
+        nodes = self._bucketed(per_conv).unionByName(
+            self._bucketed(global_, _GLOBAL_DIM_FILES)
+        )
+        with ThreadPoolExecutor(2) as pool:
+            f_edges = pool.submit(self._write, edges, "edges")
+            f_nodes = pool.submit(self._write, nodes, "nodes")
+            stats = {"edges": f_edges.result(), "nodes": f_nodes.result()}
         # node/edge-type histograms (A2 metrics) — free from the
         # partitionBy directory layout + footer counts, no Spark job
         stats["node_types"] = _histogram_from_lineage(
@@ -438,6 +414,37 @@ class Pipeline:
         return stats
 
     # ---- orchestration ----
+    def _tracked(self, run_id: str, phase: str, watermark: str | None, body) -> dict:
+        """Run ``body()`` between its state rows: 'running' first, then
+        'completed' with the stats it returns, or 'failed' if it raises;
+        both end rows carry the phase's wall seconds as ``elapsed_s``."""
+        started, t0 = _now(), time.perf_counter()
+
+        def row(status: str, stats: dict) -> None:
+            r = {
+                "run_id": run_id,
+                "phase_name": phase,
+                "partition_id": None,
+                "status": status,
+                "started_at": started,
+                "completed_at": None,
+                "watermark": watermark,
+                "stats": stats,
+            }
+            if status != "running":
+                r["completed_at"] = _now()
+                r["elapsed_s"] = time.perf_counter() - t0
+            self.state.append(r)
+
+        row("running", {})
+        try:
+            stats = body()
+        except Exception:
+            row("failed", {})
+            raise
+        row("completed", stats)
+        return stats
+
     def run(self, resume: bool = True, stop_after: str | None = None) -> PipelineResult:
         bodies = {
             "discover": self._run_discover,
@@ -454,30 +461,10 @@ class Pipeline:
         self.spark.catalog.clearCache()
         watermark = self._input_watermark()
 
-        def state_row(phase: str, status: str, started: str, stats: dict) -> None:
-            self.state.append(
-                {
-                    "run_id": self.run_id,
-                    "phase_name": phase,
-                    "partition_id": None,
-                    "status": status,
-                    "started_at": started,
-                    "completed_at": None if status == "running" else _now(),
-                    "watermark": watermark,
-                    "stats": stats,
-                }
-            )
-
         def exec_phase(phase: str) -> None:
-            started = _now()
-            state_row(phase, "running", started, {})
-            try:
-                stats = bodies[phase]()
-            except Exception:
-                state_row(phase, "failed", started, {})
-                raise
-            result.phase_stats[phase] = stats
-            state_row(phase, "completed", started, stats)
+            result.phase_stats[phase] = self._tracked(
+                self.run_id, phase, watermark, bodies[phase]
+            )
 
         # skip only when a phase completed AGAINST THE SAME INPUT:
         # a completed row with a different watermark means the
@@ -514,8 +501,6 @@ class Pipeline:
                 and i + 1 < len(pending)
                 and pending[i + 1] == "extract"
             ):
-                from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
                 with ThreadPoolExecutor(2) as pool:
                     f_d = pool.submit(exec_phase, "discover")
                     f_e = pool.submit(exec_phase, "extract")
@@ -559,7 +544,6 @@ class Pipeline:
         shutil.rmtree(tmp, ignore_errors=True)
 
     def _write_tmp(self, df: DataFrame, name: str, table: str) -> str:
-        df = self._prep_for_write(df, table)
         tmp = self._path(name)
         shutil.rmtree(tmp, ignore_errors=True)
         df.write.mode("overwrite").partitionBy(*self.partition_by[table]).parquet(tmp)
@@ -571,50 +555,23 @@ class Pipeline:
         delta_path: str | None = None,
         deleted_conv_ids: tuple[str, ...] = (),
     ) -> PipelineResult:
-        """Re-index only conversations whose content changed.
+        """Re-index only the conversations whose content changed; the
+        store ends digest-equal to a full rebuild of the new input.
 
-        Two change-detection modes:
+        Two ways to hand over the new input:
 
-        - **content-hash** (default): rescan the full input, diff
-          per-conversation content hashes FULL OUTER against the stored
-          dim. O(input) but requires nothing from the producer.
-        - **delta-driven** (``delta_path``): the producer hands the FULL
-          new row set of every changed/added conversation (the
-          reference's changed-files re-read,
-          src/core/indexing/IndexingStrategy.ts:15-75; on Iceberg this
-          is the snapshot-range incremental read) plus an explicit
-          ``deleted_conv_ids`` list. Change detection is O(delta) — the
-          unchanged 99.99% of a 100 TB corpus is never rescanned.
+        - **content-hash** (default): ``transcripts_path`` holds the
+          whole new corpus; additions, modifications and deletions are
+          all found in it.
+        - **delta-driven** (``delta_path``): the FULL new row set of every
+          changed or added conversation, plus ``deleted_conv_ids``; the
+          unchanged conversations are never rescanned.
 
-        Both modes produce byte-identical results to a full rebuild
-        (tested).
-
-        Change detection: per-conversation content_hash from the
-        discover dim (stronger than the reference's commit watermark —
-        it is content-addressed), via a FULL OUTER join of old vs new
-        dim so additions, modifications AND deletions all enter the
-        changed set. The expensive per-turn work (regex extraction,
-        turn embedding) runs ONLY on changed conversations, AND the
-        writes are bucket-surgical copy-on-write: mentions/nodes/edges
-        are partitioned by hash(conv_id) buckets, and only buckets
-        containing changed conversations (plus small global dims:
-        Entity/Tool/Conversation nodes, DEPENDS_ON/SAME_AS edges) are
-        rewritten — the parquet emulation of Iceberg MERGE INTO
-        rewriting only affected data files (same last-writer-wins
-        semantics as the reference's INSERT OR REPLACE,
-        GenericRepository.ts:23,64). If re-linking changes any
-        canonical mapping, mention buckets containing the affected
-        surfaces get their canonical_id refreshed too.
-
-        Crash safety: the OLD conversations dim and links table stay
-        committed until every dependent bucket rewrite has landed —
-        they are swapped LAST, so a retried run after any mid-run crash
-        recomputes the identical changed set from the still-intact old
-        dim and repairs the delta idempotently.
-
-        Scale posture: the changed set, links diff and changed-surface
-        set stay DataFrames end-to-end; the only driver materializations
-        are bucket-id lists (bounded by n_buckets) and scalar counts.
+        Requires a store built with the bucketed layout. Input with
+        duplicate (conv_id, turn_idx) keys raises ValueError and leaves
+        the store as it was. A crash at any point leaves the committed
+        conversations dim and links in place, so a retry finds the same
+        changes and repairs the store.
         """
         if not self.n_buckets:
             raise ValueError(
@@ -652,48 +609,63 @@ class Pipeline:
         # the copy-on-write swaps below
         self.spark.catalog.clearCache()
         result = PipelineResult(run_id=rid, out_dir=self.out_dir)
-        watermark = self._input_watermark(delta_path)
-        started = _now()
 
-        def state_row(status: str, stats: dict) -> None:
-            self.state.append(
-                {
-                    "run_id": rid,
-                    "phase_name": "incremental",
-                    "partition_id": None,
-                    "status": status,
-                    "started_at": started,
-                    "completed_at": None if status == "running" else _now(),
-                    "watermark": watermark,
-                    "stats": stats,
-                }
-            )
-
-        state_row("running", {})
-        try:
-            if delta_path is not None:
-                n_changed = self._run_incremental_delta_body(
-                    result, delta_path, deleted_conv_ids
-                )
+        def body() -> dict:
+            if delta_path is None:
+                source = self.transcripts()
+                new_dim = discover.conversations_dim(self.transcripts(keys=("conv_id",)))
             else:
-                n_changed = self._run_incremental_body(result)
-        except Exception:
-            state_row("failed", {})
-            raise
-        state_row("completed", {"changed_convs": n_changed})
+                source, new_dim = self._delta_inputs(delta_path, deleted_conv_ids)
+            mode = "content_hash" if delta_path is None else "delta"
+            return {"changed_convs": self._apply_changes(result, source, new_dim, mode)}
+
+        self._tracked(rid, "incremental", self._input_watermark(delta_path), body)
         result.elapsed_sec = time.time() - t0
         return result
 
-    def _run_incremental_body(self, result: PipelineResult) -> int:
-        t_all = self.transcripts()
+    def _delta_inputs(
+        self, delta_path: str, deleted_conv_ids: tuple[str, ...]
+    ) -> tuple[DataFrame, DataFrame]:
+        """Delta mode's rows (rebalanced like the full input) and its new
+        dim: the committed rows of every conversation the delta neither
+        ships nor deletes, plus the delta's own."""
+        delta = self.transcripts(path=delta_path)
+        # reject ambiguous input up front: a conversation present in the
+        # delta AND in the deletion list would otherwise be silently
+        # resurrected (rebuilt from its delta rows) — make the producer
+        # pick one intent
+        if deleted_conv_ids:
+            conflict = (
+                delta.select("conv_id")
+                .filter(F.col("conv_id").isin(list(deleted_conv_ids)))
+                .limit(1)
+                .collect()
+            )
+            if conflict:
+                raise ValueError(
+                    f"conv_id {conflict[0]['conv_id']!r} appears in both "
+                    "delta_path and deleted_conv_ids — a deleted "
+                    "conversation must not ship delta rows"
+                )
+        replaced = delta.select("conv_id").unionByName(
+            self.spark.createDataFrame([(c,) for c in deleted_conv_ids], "conv_id string")
+        )
+        old = self._read("conversations")
+        merged = old.join(replaced, "conv_id", "left_anti").unionByName(
+            discover.conversations_dim(delta).select(*old.columns)
+        )
+        return delta, merged
 
-        # --- discover (full refresh of the cheap dim) + changed set ---
-        # new dim goes to a tmp table: change detection must see the OLD
-        # files, and the old dim must SURVIVE until all dependent tables
-        # commit (on Iceberg the old snapshot stays readable; on raw
-        # parquet we sequence the writes instead)
-        new_conv = discover.conversations_dim(self.transcripts(keys=("conv_id",)))
-        stats_d = self._write(new_conv, "conversations_incr")
+    def _apply_changes(
+        self, result: PipelineResult, source: DataFrame, new_dim: DataFrame, mode: str
+    ) -> int:
+        """The step both modes meet in. The new dim goes to a tmp table
+        (change detection must see the OLD files, and the old dim must
+        survive until every dependent table commits); the changed set is
+        its content-hash diff against the committed dim — a FULL OUTER
+        join, so additions, modifications AND deletions all enter it —
+        and ``source`` restricted to that set is what gets re-indexed."""
+        stats_d = self._write_dim(new_dim, "conversations_incr")
         old_hashes = self._read("conversations").select(
             "conv_id", F.col("content_hash").alias("old_hash")
         )
@@ -714,110 +686,31 @@ class Pipeline:
         result.phase_stats["discover"] = {
             "conversations": stats_d,
             "changed_convs": n_changed,
-        }
-
-        if n_changed == 0:
-            self._swap("conversations_incr", "conversations")
-            return 0
-
-        t_changed = t_all.join(
-            F.broadcast(changed) if n_changed <= 1_000_000 else changed,
-            "conv_id",
-            "left_semi",
-        )
-        return self._incremental_core(result, changed, t_changed, n_changed)
-
-    def _run_incremental_delta_body(
-        self,
-        result: PipelineResult,
-        delta_path: str,
-        deleted_conv_ids: tuple[str, ...],
-    ) -> int:
-        spark = self.spark
-        delta = spark.read.parquet(delta_path)
-        target = spark.sparkContext.defaultParallelism
-        if effective_scan_splits(delta, target) < target:
-            delta = delta.repartition(target, "conv_id", "turn_idx")
-        # reject ambiguous input up front: a conversation present in the
-        # delta AND in the deletion list would otherwise be silently
-        # resurrected (rebuilt from its delta rows) — make the producer
-        # pick one intent
-        if deleted_conv_ids:
-            conflict = (
-                delta.select("conv_id")
-                .filter(F.col("conv_id").isin(list(deleted_conv_ids)))
-                .limit(1)
-                .collect()
-            )
-            if conflict:
-                raise ValueError(
-                    f"conv_id {conflict[0]['conv_id']!r} appears in both "
-                    "delta_path and deleted_conv_ids — a deleted "
-                    "conversation must not ship delta rows"
-                )
-        deleted = spark.createDataFrame(
-            [(c,) for c in deleted_conv_ids], "conv_id string"
-        )
-        changed = (
-            delta.select("conv_id")
-            .distinct()
-            .unionByName(deleted)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_changed = changed.count()
-        # merged dim: carry untouched rows, recompute changed convs from
-        # the delta (which holds their FULL new row sets); deleted convs
-        # are dropped by the anti-join and contribute no new rows
-        new_rows = discover.conversations_dim(delta)
-        merged_dim = (
-            self._read("conversations")
-            .join(changed, "conv_id", "left_anti")
-            .unionByName(new_rows.select(*self._read("conversations").columns))
-        )
-        stats_d = self._write(merged_dim, "conversations_incr")
-        # delta mode skips content hashing, so a malformed delta (e.g.
-        # duplicate (conv_id, turn_idx) rows from a producer that
-        # appended instead of replacing) would otherwise corrupt the
-        # store undetected until a later full-scan incremental — apply
-        # the same dup-key guard _run_discover applies to the full dim
-        n_bad = (
-            self._read("conversations_incr")
-            .filter(F.col("n_turns") != F.col("n_distinct_turns"))
-            .limit(1)
-            .count()
-        )
-        if n_bad:
-            raise ValueError(
-                "duplicate (conv_id, turn_idx) keys in the merged dim — "
-                "delta_path must hold the FULL deduplicated row set of "
-                "each changed conversation (not an append-only fragment)"
-            )
-        result.phase_stats["discover"] = {
-            "conversations": stats_d,
-            "changed_convs": n_changed,
-            "mode": "delta",
+            "mode": mode,
         }
         if n_changed == 0:
             self._swap("conversations_incr", "conversations")
             return 0
-        return self._incremental_core(result, changed, delta, n_changed)
+        # broadcast the changed set only when it is actually small — a
+        # backfill can flip the whole corpus and a forced broadcast of
+        # that would OOM the driver on a real cluster
+        changed_side = F.broadcast(changed) if n_changed <= 1_000_000 else changed
+        t_changed = source.join(changed_side, "conv_id", "left_semi")
+        return self._incremental_core(result, changed, changed_side, t_changed, n_changed)
 
     def _incremental_core(
         self,
         result: PipelineResult,
         changed: DataFrame,
+        changed_side: DataFrame,
         t_changed: DataFrame,
         n_changed: int,
     ) -> int:
-        """Bucket-surgical rewrite shared by both change-detection
-        modes: ``changed`` = conv_id DataFrame (incl. deletions),
-        ``t_changed`` = the full transcript rows of changed convs."""
-        # broadcast the changed set only when it is actually small — a
-        # backfill can flip the whole corpus and a forced broadcast of
-        # that would OOM the driver on a real cluster
-        changed_side = F.broadcast(changed) if n_changed <= 1_000_000 else changed
-
+        """Bucket-surgical copy-on-write rewrite: ``changed`` = conv_id
+        DataFrame (incl. deletions), ``t_changed`` = the full transcript
+        rows of changed convs. The per-conversation node and edge types
+        are rebuilt from the changed slice into the buckets it touches;
+        the global types are rebuilt whole from the merged inputs."""
         bcol = bucket_col(self.n_buckets)
         affected = sorted(
             r["b"] for r in changed.select(bcol.alias("b")).distinct().collect()
@@ -825,9 +718,12 @@ class Pipeline:
         result.phase_stats["discover"]["affected_buckets"] = affected
 
         # --- extract only changed conversations; bucket-surgical merge ---
-        mentions_new = extract.extract_mentions(t_changed).withColumn("bucket", bcol)
-        m_old_aff = self._read("mentions").filter(F.col("bucket").isin(affected))
-        m_keep = m_old_aff.join(changed_side, "conv_id", "left_anti")
+        mentions_new = self._bucketed(extract.extract_mentions(t_changed))
+        m_keep = (
+            self._read("mentions")
+            .filter(F.col("bucket").isin(affected))
+            .join(changed_side, "conv_id", "left_anti")
+        )
         merged_aff = m_keep.unionByName(mentions_new.select(*m_keep.columns))
         self._write_tmp(merged_aff, "mentions_incr", "mentions")
         self._replace_partition_dirs(
@@ -879,44 +775,38 @@ class Pipeline:
         m_changed = mentions.filter(F.col("bucket").isin(affected)).join(
             changed_side, "conv_id", "left_semi"
         )
-        triples_changed = extract.assemble_triples(t_changed, m_changed)
-        empty_same_as = link.same_as_edges(links_new).limit(0)
-        per_conv_new = materialize.build_edges(
-            triples_changed.filter(F.col("edge_type") != "DEPENDS_ON"), empty_same_as
-        ).withColumn("bucket", bcol)
+        per_conv_new = self._bucketed(
+            materialize.per_conv_edges(extract.assemble_triples(t_changed, m_changed))
+        )
         e_carried = (
             self._read("edges")
             .filter(
-                F.col("edge_type").isin(list(_PER_CONV_EDGE_TYPES))
+                F.col("edge_type").isin(*PER_CONV_EDGE_TYPES)
                 & F.col("bucket").isin(affected)
             )
             .join(changed_side, "conv_id", "left_anti")
         )
-        # global types from the merged mentions, pre-filtered to the
-        # DEPENDS_ON-bearing rows (kind pushdown to the parquet scan —
-        # no point exploding the other 99% of mentions)
-        dep_triples = extract.assemble_triples(
-            t_changed.limit(0),  # schema only — the turn branch is empty
-            mentions.drop("bucket").filter(F.col("kind") == "depends_on"),
-        ).filter(F.col("edge_type") == "DEPENDS_ON")
-        global_edges = materialize.build_edges(
-            dep_triples, link.same_as_edges(links_new)
-        ).withColumn("bucket", bcol)
+        # DEPENDS_ON comes from the merged mentions; the kind filter
+        # reaches the parquet scan, so the other mentions never explode
+        global_new = self._bucketed(
+            materialize.global_edges(
+                extract.mention_triples(mentions.filter(F.col("kind") == KIND_DEPENDS)),
+                link.same_as_edges(links_new),
+            )
+        )
         all_edges = (
             e_carried.select(*per_conv_new.columns)
             .unionByName(per_conv_new)
-            .unionByName(global_edges)
+            .unionByName(global_new)
         )
         self._write_tmp(all_edges, "edges_incr", "edges")
         edge_dirs = [
-            f"edge_type={e}/bucket={b}"
-            for e in _PER_CONV_EDGE_TYPES
-            for b in affected
-        ] + [f"edge_type={e}" for e in _GLOBAL_EDGE_TYPES]
+            f"edge_type={e}/bucket={b}" for e in PER_CONV_EDGE_TYPES for b in affected
+        ] + [f"edge_type={e}" for e in GLOBAL_EDGE_TYPES]
         self._replace_partition_dirs("edges_incr", "edges", edge_dirs)
         result.phase_stats.setdefault("materialize", {})["edges_rewritten"] = {
             "per_conv_buckets": len(affected),
-            "global_types": list(_GLOBAL_EDGE_TYPES),
+            "global_types": list(GLOBAL_EDGE_TYPES),
         }
 
         # --- nodes: carry + refresh Turn/Mention in affected buckets,
@@ -940,64 +830,56 @@ class Pipeline:
                 .drop("surface_norm", "canonical_norm")
             )
 
+        # Mention nodes carry canonical ids, so a re-link also rewrites
+        # their buckets the change never touched
+        mention_buckets = sorted(set(affected) | set(extra_buckets))
+        old_nodes = self._read("nodes")
         n_carried = refresh_canonical(
-            self._read("nodes")
-            .filter(
-                F.col("node_type").isin(list(_PER_CONV_NODE_TYPES))
+            old_nodes.filter(
+                F.col("node_type").isin(*PER_CONV_NODE_TYPES)
                 & F.col("bucket").isin(affected)
             )
             .join(changed_side, "conv_id", "left_anti")
-        )
-        n_extra = refresh_canonical(
-            self._read("nodes").filter(
-                (F.col("node_type") == "Mention")
-                & F.col("bucket").isin(extra_buckets)
+            .unionByName(
+                old_nodes.filter(
+                    (F.col("node_type") == "Mention")
+                    & F.col("bucket").isin(extra_buckets)
+                )
             )
-        ) if extra_buckets else None
-        n_new = materialize.build_nodes(
-            t_changed,
-            self._read("conversations_incr").join(
-                changed_side, "conv_id", "left_semi"
-            ),
-            m_changed.drop("bucket"),
-            self._read("edges"),
-            links_new,
-        ).filter(F.col("node_type").isin(list(_PER_CONV_NODE_TYPES))).withColumn(
-            "bucket", bcol
         )
-        # NOTE: the FULL merged mentions feed the global build — entity
-        # nodes carry adjacency aggregates (A7) over the whole corpus;
-        # the per-conv branches are pruned away by the node_type filter
-        n_global = materialize.build_nodes(
-            t_changed.limit(0),
-            self._read("conversations_incr"),
-            mentions.drop("bucket"),
-            self._read("edges"),
-            links_new,
-        ).filter(F.col("node_type").isin(list(_GLOBAL_NODE_TYPES))).withColumn(
-            "bucket", bcol
+        n_new = self._bucketed(
+            materialize.per_conv_nodes(t_changed, m_changed, links_new)
+        )
+        # the FULL merged mentions feed the global build: entity nodes
+        # carry adjacency aggregates (A7) over the whole corpus; the Tool
+        # ids are the INVOKES targets of the edges just committed
+        tool_ids = (
+            self._read("edges")
+            .filter(F.col("edge_type") == "INVOKES")
+            .select(F.col("dst").alias("id"))
+            .distinct()
+        )
+        n_global = self._bucketed(
+            materialize.global_nodes(
+                self._read("conversations_incr"), links_new, mentions, tool_ids
+            )
         )
         all_nodes = (
             n_carried.select(*n_new.columns)
             .unionByName(n_new)
             .unionByName(n_global)
         )
-        if n_extra is not None:
-            all_nodes = all_nodes.unionByName(n_extra.select(*n_new.columns))
         self._write_tmp(all_nodes, "nodes_incr", "nodes")
-        node_dirs = (
-            [f"node_type=Turn/bucket={b}" for b in affected]
-            + [
-                f"node_type=Mention/bucket={b}"
-                for b in sorted(set(affected) | set(extra_buckets))
-            ]
-            + [f"node_type={t}" for t in _GLOBAL_NODE_TYPES]
-        )
+        node_dirs = [
+            f"node_type={t}/bucket={b}"
+            for t in PER_CONV_NODE_TYPES
+            for b in (mention_buckets if t == "Mention" else affected)
+        ] + [f"node_type={t}" for t in GLOBAL_NODE_TYPES]
         self._replace_partition_dirs("nodes_incr", "nodes", node_dirs)
         result.phase_stats["materialize"]["nodes_rewritten"] = {
             "turn_buckets": len(affected),
-            "mention_buckets": len(set(affected) | set(extra_buckets)),
-            "global_types": list(_GLOBAL_NODE_TYPES),
+            "mention_buckets": len(mention_buckets),
+            "global_types": list(GLOBAL_NODE_TYPES),
         }
 
         # --- commit the change-detection signals LAST: links, then the
@@ -1067,9 +949,19 @@ class Pipeline:
         # table first — a table that never re-crosses the fragmentation
         # threshold would otherwise keep a stale copy on disk forever
         self._sweep()
+        report = self._tracked(
+            self.run_id,
+            "compact",
+            None,
+            lambda: self._compact_tables(tables or self._COMPACTABLE, target_files_per_dir),
+        )
+        self.spark.catalog.clearCache()
+        return report
+
+    def _compact_tables(self, tables: tuple[str, ...], target_files_per_dir: int) -> dict:
         report: dict[str, dict] = {}
         default_par = self.spark.sparkContext.defaultParallelism
-        for name in tables or self._COMPACTABLE:
+        for name in tables:
             path = self._path(name)
             if not os.path.exists(path):
                 continue
@@ -1090,10 +982,11 @@ class Pipeline:
             # partition layout comes from the DIRS actually on disk
             # (key= segments of the relative file paths), NOT the
             # configured partition_by map: compacting a plain-layout
-            # store with --buckets set must not reference a missing
-            # bucket column, and compacting a BUCKETED store through a
-            # Pipeline built with n_buckets=None must not demote the
-            # bucket= dirs to a data column (ADVICE r3)
+            # store through a Pipeline built with n_buckets set must not
+            # reference a missing bucket column, and compacting a
+            # BUCKETED store through a Pipeline built with
+            # n_buckets=None must not demote the bucket= dirs to a data
+            # column (ADVICE r3)
             disk_cols: list[str] = []
             for rel in before:
                 for seg in rel.split(os.sep)[:-1]:
@@ -1139,16 +1032,6 @@ class Pipeline:
                 "rows": rows_after,
                 "rewritten": True,
             }
-        self.spark.catalog.clearCache()
-        self.state.append(
-            {
-                "phase_name": "compact",
-                "status": "completed",
-                "run_id": self.run_id,
-                "completed_at": _now(),
-                "stats": report,
-            }
-        )
         return report
 
     # convenience readers

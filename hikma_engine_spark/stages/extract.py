@@ -30,7 +30,8 @@ from ..extraction import (
     make_extractor,
 )
 
-_TRIPLE_COLS = ["src", "edge_type", "dst", "conv_id", "turn_idx", "rule"]
+# the exploded triple struct ``t`` flattened next to its turn key
+_TRIPLE_COLS = ["t.src", "t.edge_type", "t.dst", "conv_id", "turn_idx", "t.rule"]
 
 
 def _turn_id() -> F.Column:
@@ -69,26 +70,16 @@ def _triple_struct(edge_type: str, src: F.Column, dst: F.Column, rule: F.Column)
     )
 
 
-def assemble_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Mentions + transcripts → the raw (pre-canonicalization) triple set.
-
-    Vocabulary (schemas.EDGE_TYPES; analog of the reference's EdgeTypes,
-    src/types/index.ts:18-29):
-      turn IN_CONV conv | mention IN_TURN turn | mention REFERS_TO entity
-      turn MENTIONS entity (distinct per turn) | turn INVOKES tool
-      entity DEPENDS_ON entity (SVO rule)
-
-    Plan shape: ONE pass over each input. Each mention row explodes
-    into its 0-3 triples via a guarded struct array (a union of 5
-    per-branch subplans would scan the mentions table 5 times); every
-    branch is unique by construction (first_in_turn), so there is no
-    dedup shuffle anywhere — the whole assembly is narrow.
-    """
+def mention_triples(mentions: DataFrame) -> DataFrame:
+    """Mention rows → their IN_TURN/REFERS_TO/MENTIONS/INVOKES/DEPENDS_ON
+    triples. Each mention row explodes into its 0-3 triples via a
+    guarded struct array: one pass over the mentions (a union of 5
+    per-branch subplans would scan them 5 times)."""
     is_entity = F.col("kind").isin(KIND_GAZETTEER, KIND_AT)
     first = F.col("first_in_turn")
     ent_dst = F.concat(F.lit("entity:"), F.col("surface_norm"))
 
-    mention_triples = (
+    return (
         mentions.select(
             "conv_id",
             "turn_idx",
@@ -130,10 +121,13 @@ def assemble_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
             ).alias("t"),
         )
         .filter(F.col("t").isNotNull())
-        .select("t.src", "t.edge_type", "t.dst", "conv_id", "turn_idx", "t.rule")
+        .select(*_TRIPLE_COLS)
     )
 
-    turn_triples = (
+
+def turn_triples(transcripts: DataFrame) -> DataFrame:
+    """Turn rows → IN_CONV triples, plus INVOKES for role='tool' turns."""
+    return (
         transcripts.select(
             "conv_id",
             "turn_idx",
@@ -158,7 +152,21 @@ def assemble_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
             ).alias("t"),
         )
         .filter(F.col("t").isNotNull())
-        .select("t.src", "t.edge_type", "t.dst", "conv_id", "turn_idx", "t.rule")
+        .select(*_TRIPLE_COLS)
     )
 
-    return mention_triples.unionByName(turn_triples).select(*_TRIPLE_COLS)
+
+def assemble_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
+    """Mentions + transcripts → the raw (pre-canonicalization) triple set.
+
+    Vocabulary (schemas.EDGE_TYPES; analog of the reference's EdgeTypes,
+    src/types/index.ts:18-29):
+      turn IN_CONV conv | mention IN_TURN turn | mention REFERS_TO entity
+      turn MENTIONS entity (distinct per turn) | turn INVOKES tool
+      entity DEPENDS_ON entity (SVO rule)
+
+    Plan shape: ONE narrow pass over each input, no shuffle. Every
+    triple but INVOKES and DEPENDS_ON is unique by construction
+    (first_in_turn); materialize deduplicates those two slices.
+    """
+    return mention_triples(mentions).unionByName(turn_triples(transcripts))

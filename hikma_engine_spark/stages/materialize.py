@@ -245,20 +245,10 @@ def tool_source_ids(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
     return a.unionByName(b).distinct()
 
 
-def tool_nodes(edges_or_triples: DataFrame, tool_ids: DataFrame | None = None) -> DataFrame:
-    """Tool dim from INVOKES edges (edge_type partition pruning on the
-    written table), or from a precomputed ``tool_ids`` dim
-    (tool_source_ids) when the edges table is being written
-    concurrently."""
-    tools = (
-        tool_ids
-        if tool_ids is not None
-        else edges_or_triples.filter(F.col("edge_type") == "INVOKES")
-        .select(F.col("dst").alias("id"))
-        .distinct()
-    )
+def tool_nodes(tool_ids: DataFrame) -> DataFrame:
+    """One Tool node per id of a tool-id dim (column ``id``)."""
     name = F.regexp_replace(F.col("id"), "^tool:", "")
-    return tools.select(
+    return tool_ids.select(
         F.col("id"),
         F.col("id").alias("business_key"),
         F.lit("Tool").alias("node_type"),
@@ -272,63 +262,66 @@ def tool_nodes(edges_or_triples: DataFrame, tool_ids: DataFrame | None = None) -
     )
 
 
-def build_nodes(
-    transcripts: DataFrame,
-    conversations: DataFrame,
-    mentions: DataFrame,
-    edges: DataFrame | None,
-    links: DataFrame,
-    embed: bool = True,
-    tool_ids: DataFrame | None = None,
-) -> DataFrame:
-    parts = [
-        conversation_nodes(conversations),
-        turn_nodes(transcripts, embed=embed),
-        mention_nodes(mentions, links),
-        entity_nodes(links, mentions, embed=embed),
-        tool_nodes(edges, tool_ids=tool_ids),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(*_NODE_COLS)
-
-
 # NOTE: do NOT wrap embed_udf in F.when() over a unioned node table to
 # embed "only some types" — Spark extracts pandas UDFs into an
 # unconditional projection, so the UDF runs on EVERY row regardless of
 # the guard. Embed per branch (turn_nodes/entity_nodes embed flags)
 # before the union instead.
 
+# ---- the node and edge tables, split by scope ----
+# Per-conversation types are keyed by conv_id: a change to one
+# conversation touches only its own rows (bucket-surgical rewrites in
+# run_incremental). Global types aggregate over the whole corpus and are
+# rebuilt wholesale from the merged inputs.
+PER_CONV_NODE_TYPES = ("Turn", "Mention")
+GLOBAL_NODE_TYPES = ("Conversation", "Entity", "Tool")
+PER_CONV_EDGE_TYPES = ("IN_CONV", "IN_TURN", "REFERS_TO", "MENTIONS", "INVOKES")
+GLOBAL_EDGE_TYPES = ("DEPENDS_ON", "SAME_AS")
 
-def build_edges(triples: DataFrame, same_as: DataFrame) -> DataFrame:
-    """Triples → graph_edges rows; id = md5(src|type|dst).
 
-    Uniqueness strategy (the INSERT-OR-REPLACE analog, engineered for
-    scale): every turn-anchored edge type (IN_CONV/IN_TURN/REFERS_TO/
-    MENTIONS/INVOKES) is unique BY CONSTRUCTION — its src embeds the
-    turn id and extraction emits one row per key (first_in_turn). Only
-    the turn-independent DEPENDS_ON edges can repeat across turns, so
-    the global-dedup shuffle runs on that small slice alone instead of
-    sorting the full multi-billion-row triple set.
-    """
-    # DEPENDS_ON can repeat across turns; INVOKES can repeat when a
-    # role='tool' turn also says call:<same tool> in its text
-    dedup_types = ("DEPENDS_ON", "INVOKES")
-    dep = triples.filter(F.col("edge_type").isin(*dedup_types))
-    dep_dedup = (
-        dep.groupBy("src", "edge_type", "dst")
-        .agg(
-            F.min("conv_id").alias("conv_id"),
-            F.min("turn_idx").alias("turn_idx"),
-            F.min("rule").alias("rule"),
-        )
-        .select("src", "edge_type", "dst", "conv_id", "turn_idx", "rule")
+def per_conv_nodes(
+    transcripts: DataFrame, mentions: DataFrame, links: DataFrame
+) -> DataFrame:
+    """Turn nodes + Mention nodes. Turns embed inline: a shuffle of
+    ``transcripts`` (the bucketed layout's) runs before the embedding,
+    so vectors never cross it."""
+    return (
+        turn_nodes(transcripts)
+        .unionByName(mention_nodes(mentions, links))
+        .select(*_NODE_COLS)
     )
-    rest = triples.filter(~F.col("edge_type").isin(*dedup_types))
-    all_triples = rest.unionByName(dep_dedup).unionByName(same_as)
+
+
+def global_nodes(
+    conversations: DataFrame,
+    links: DataFrame,
+    mentions: DataFrame,
+    tool_ids: DataFrame,
+) -> DataFrame:
+    """Conversation, Entity (embedded, with adjacency over ``mentions``)
+    and Tool nodes."""
+    return (
+        conversation_nodes(conversations)
+        .unionByName(entity_nodes(links, mentions))
+        .unionByName(tool_nodes(tool_ids))
+        .select(*_NODE_COLS)
+    )
+
+
+def _first_per_key(triples: DataFrame) -> DataFrame:
+    """One triple per (src, edge_type, dst): the smallest conv_id,
+    turn_idx and rule among its copies (one shuffle over the slice)."""
+    return triples.groupBy("src", "edge_type", "dst").agg(
+        F.min("conv_id").alias("conv_id"),
+        F.min("turn_idx").alias("turn_idx"),
+        F.min("rule").alias("rule"),
+    )
+
+
+def _edge_rows(triples: DataFrame) -> DataFrame:
+    """Triples → graph_edges rows; id = md5(src|type|dst)."""
     edge_id = F.md5(F.concat_ws("|", "src", "edge_type", "dst"))
-    return all_triples.select(
+    return triples.select(
         edge_id.alias("id"),
         "src",
         "edge_type",
@@ -340,6 +333,32 @@ def build_edges(triples: DataFrame, same_as: DataFrame) -> DataFrame:
         "turn_idx",
         (F.col("rule") == "at").alias("dynamic"),  # low-confidence flag
     )
+
+
+def per_conv_edges(triples: DataFrame) -> DataFrame:
+    """IN_CONV/IN_TURN/REFERS_TO/MENTIONS/INVOKES edges. Each is unique
+    by construction (its src embeds the turn id and extraction emits one
+    row per key, first_in_turn) except INVOKES: a role='tool' turn that
+    also says call:<same tool> yields it twice, so only the INVOKES
+    slice is deduplicated — never the full triple set."""
+    t = triples.filter(F.col("edge_type").isin(*PER_CONV_EDGE_TYPES))
+    invokes = F.col("edge_type") == "INVOKES"
+    return _edge_rows(
+        t.filter(~invokes).unionByName(_first_per_key(t.filter(invokes)))
+    )
+
+
+def global_edges(triples: DataFrame, same_as: DataFrame) -> DataFrame:
+    """DEPENDS_ON edges (the same entity pair can be stated in many
+    turns: deduplicated) + the linker's SAME_AS edges."""
+    dep = _first_per_key(triples.filter(F.col("edge_type") == "DEPENDS_ON"))
+    return _edge_rows(dep.unionByName(same_as))
+
+
+def build_edges(triples: DataFrame, same_as: DataFrame) -> DataFrame:
+    """The full edge table (the INSERT-OR-REPLACE analog: deterministic
+    ids, one row per key)."""
+    return per_conv_edges(triples).unionByName(global_edges(triples, same_as))
 
 
 def referential_violations(nodes: DataFrame, edges: DataFrame) -> DataFrame:

@@ -7,6 +7,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from hikma_engine_spark.pipeline import Pipeline
@@ -420,25 +421,36 @@ def test_deleted_without_delta_raises(spark, corpus_path, tmp_path):
         p.run_incremental(deleted_conv_ids=("conv0000003",))
 
 
-def test_delta_mode_duplicate_keys_rejected(spark, corpus_pdf, corpus_path, tmp_path):
-    """ADVICE r2: a malformed delta (duplicate (conv_id, turn_idx) rows —
-    e.g. a producer that appended instead of replacing) must fail the
-    run, not silently corrupt the store."""
-    import pytest
+@pytest.mark.parametrize("mode", ["content_hash", "delta"])
+def test_delta_mode_duplicate_keys_rejected(spark, tiny_path, tmp_path, mode):
+    """ADVICE r2: input with duplicate (conv_id, turn_idx) rows — e.g. a
+    producer that appended instead of replacing — must fail the run in
+    either change-detection mode and leave the store as it was, not
+    silently corrupt it."""
+    out = str(tmp_path / "dup")
+    Pipeline(spark, tiny_path, out, run_id="base", n_buckets=1).run(resume=False)
+    tables = ("conversations", "mentions", "links", "same_as", "nodes", "edges")
+    base = Pipeline(spark, tiny_path, out, n_buckets=1)
+    before = {t: _digest(base._read(t)) for t in tables}
 
-    out = str(tmp_path / "dup_delta")
-    Pipeline(spark, corpus_path, out, run_id="base", n_buckets=64).run(resume=False)
-
-    conv = "conv0000003"
-    delta = corpus_pdf[corpus_pdf.conv_id == conv].copy()
-    bad = pd.concat([delta, delta.iloc[[0]]], ignore_index=True)  # dup turn 0
-    d_path = str(tmp_path / "bad_delta.parquet")
+    v1 = pd.read_parquet(tiny_path)
+    c2 = v1[v1.conv_id == "c2"]
+    bad = pd.concat([v1, c2.iloc[[0]]], ignore_index=True)  # dup c2 turn 0
+    if mode == "delta":
+        bad = bad[bad.conv_id == "c2"]
+    bad_path = str(tmp_path / "bad.parquet")
     bad.to_parquet(
-        d_path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
+        bad_path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
     )
-    p = Pipeline(spark, corpus_path, out, run_id="incr", n_buckets=64)
+    if mode == "delta":
+        p = Pipeline(spark, tiny_path, out, run_id="incr", n_buckets=1)
+        kwargs = {"delta_path": bad_path}
+    else:
+        p = Pipeline(spark, bad_path, out, run_id="incr", n_buckets=1)
+        kwargs = {}
     with pytest.raises(ValueError, match="duplicate \\(conv_id, turn_idx\\)"):
-        p.run_incremental(delta_path=d_path)
+        p.run_incremental(**kwargs)
+    assert {t: _digest(p._read(t)) for t in tables} == before
 
 
 def test_compact_preserves_content(spark, corpus_pdf, corpus_path, tmp_path):

@@ -100,6 +100,24 @@ def test_state_rows_and_metrics(pipeline_out):
     # per-partition lineage manifest present
     assert mat["stats"]["nodes"]["per_partition"]
     assert all(r["watermark"] for r in completed)
+    # wall seconds per phase, finer than the whole-second timestamps
+    assert all(
+        isinstance(r["elapsed_s"], float) and r["elapsed_s"] > 0 for r in completed
+    )
+
+
+def test_bucketed_layout_matches_unbucketed(spark, corpus_path, pipeline_out, tmp_path):
+    """Both layouts run one materialize body; only the shaping differs.
+    A bucketed full build's tables, bucket column dropped, equal the
+    unbucketed build's."""
+    out = str(tmp_path / "bucketed_out")
+    p = Pipeline(spark, corpus_path, out, run_id="bucketed", n_buckets=1)
+    p.run(resume=False)
+    for table in ("nodes", "edges", "mentions"):
+        assert "bucket" in p._read(table).columns
+        assert _table_digest(p._read(table).drop("bucket")) == _table_digest(
+            pipeline_out._read(table)
+        ), f"{table} differs between the layouts"
 
 
 def test_turn_doc_excerpt_property(spark):
