@@ -24,6 +24,7 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from urllib.parse import quote, unquote
@@ -31,7 +32,6 @@ from urllib.parse import quote, unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extraction import KIND_DEPENDS
 from .splits import effective_scan_splits
 from .stages import discover, extract, link, materialize
 from .stages.materialize import (
@@ -263,11 +263,7 @@ class Pipeline:
 
         def reject(dim: DataFrame) -> str | None:
             if dim.filter(F.col("n_turns") != F.col("n_distinct_turns")).limit(1).count():
-                return (
-                    "duplicate (conv_id, turn_idx) keys in the input — a "
-                    "delta_path must hold the FULL deduplicated row set of "
-                    "each changed conversation"
-                )
+                return "duplicate (conv_id, turn_idx) keys in the input"
             return None
 
         return self._write(df, name, reject)
@@ -379,11 +375,13 @@ class Pipeline:
         mentions, links = self._read("mentions"), self._read("links")
         # triple assembly is narrow and UDF-free, so it reads the input
         # without the rebalance shuffle the embedding branch needs
-        triples = extract.assemble_triples(
-            self.spark.read.parquet(self.transcripts_path), mentions
-        )
         edges = self._bucketed(
-            materialize.build_edges(triples, self._read("same_as")), self.n_buckets
+            materialize.build_edges(
+                self.spark.read.parquet(self.transcripts_path),
+                mentions,
+                self._read("same_as"),
+            ),
+            self.n_buckets,
         )
         # Turn rows embed after the layout's shuffle, so vectors never
         # cross an exchange; Mention rows keep the mentions scan's lineage
@@ -614,10 +612,17 @@ class Pipeline:
             if delta_path is None:
                 source = self.transcripts()
                 new_dim = discover.conversations_dim(self.transcripts(keys=("conv_id",)))
+                changed_ids, mode = self._hash_diff, "content_hash"
             else:
-                source, new_dim = self._delta_inputs(delta_path, deleted_conv_ids)
-            mode = "content_hash" if delta_path is None else "delta"
-            return {"changed_convs": self._apply_changes(result, source, new_dim, mode)}
+                source, new_dim, changed_ids = self._delta_inputs(
+                    delta_path, deleted_conv_ids
+                )
+                mode = "delta"
+            return {
+                "changed_convs": self._apply_changes(
+                    result, source, new_dim, changed_ids, mode
+                )
+            }
 
         self._tracked(rid, "incremental", self._input_watermark(delta_path), body)
         result.elapsed_sec = time.time() - t0
@@ -625,10 +630,13 @@ class Pipeline:
 
     def _delta_inputs(
         self, delta_path: str, deleted_conv_ids: tuple[str, ...]
-    ) -> tuple[DataFrame, DataFrame]:
-        """Delta mode's rows (rebalanced like the full input) and its new
-        dim: the committed rows of every conversation the delta neither
-        ships nor deletes, plus the delta's own."""
+    ) -> tuple[DataFrame, DataFrame, Callable[[], DataFrame]]:
+        """Delta mode's rows (rebalanced like the full input), its new
+        dim — the committed rows of every conversation the delta neither
+        ships nor deletes, plus the delta's own — and its changed ids:
+        every conversation it ships or deletes. Those are re-indexed
+        whether or not their content hash moved, since the hash covers
+        only turn_idx and text, not role, tool or ts."""
         delta = self.transcripts(path=delta_path)
         # reject ambiguous input up front: a conversation present in the
         # delta AND in the deletion list would otherwise be silently
@@ -654,25 +662,19 @@ class Pipeline:
         merged = old.join(replaced, "conv_id", "left_anti").unionByName(
             discover.conversations_dim(delta).select(*old.columns)
         )
-        return delta, merged
+        return delta, merged, replaced.distinct
 
-    def _apply_changes(
-        self, result: PipelineResult, source: DataFrame, new_dim: DataFrame, mode: str
-    ) -> int:
-        """The step both modes meet in. The new dim goes to a tmp table
-        (change detection must see the OLD files, and the old dim must
-        survive until every dependent table commits); the changed set is
-        its content-hash diff against the committed dim — a FULL OUTER
-        join, so additions, modifications AND deletions all enter it —
-        and ``source`` restricted to that set is what gets re-indexed."""
-        stats_d = self._write_dim(new_dim, "conversations_incr")
+    def _hash_diff(self) -> DataFrame:
+        """Content-hash mode's changed ids: the written new dim diffed
+        against the committed one — a FULL OUTER join, so additions,
+        modifications AND deletions all enter it."""
         old_hashes = self._read("conversations").select(
             "conv_id", F.col("content_hash").alias("old_hash")
         )
         new_hashes = self._read("conversations_incr").select(
             "conv_id", F.col("content_hash").alias("new_hash")
         )
-        changed = (
+        return (
             new_hashes.join(old_hashes, "conv_id", "full_outer")
             .filter(
                 F.col("old_hash").isNull()  # added conversation
@@ -680,8 +682,24 @@ class Pipeline:
                 | (F.col("new_hash") != F.col("old_hash"))  # modified
             )
             .select("conv_id")
-            .localCheckpoint(eager=True)  # reused ~8x below; never collected
         )
+
+    def _apply_changes(
+        self,
+        result: PipelineResult,
+        source: DataFrame,
+        new_dim: DataFrame,
+        changed_ids: Callable[[], DataFrame],
+        mode: str,
+    ) -> int:
+        """The step both modes meet in. The new dim goes to a tmp table
+        (change detection must see the OLD files, and the old dim must
+        survive until every dependent table commits); ``changed_ids()``,
+        the mode's distinct changed conv_ids, is called after that write,
+        and ``source`` restricted to that set is what gets re-indexed."""
+        stats_d = self._write_dim(new_dim, "conversations_incr")
+        # reused ~8x below; never collected
+        changed = changed_ids().localCheckpoint(eager=True)
         n_changed = changed.count()
         result.phase_stats["discover"] = {
             "conversations": stats_d,
@@ -775,9 +793,7 @@ class Pipeline:
         m_changed = mentions.filter(F.col("bucket").isin(affected)).join(
             changed_side, "conv_id", "left_semi"
         )
-        per_conv_new = self._bucketed(
-            materialize.per_conv_edges(extract.assemble_triples(t_changed, m_changed))
-        )
+        per_conv_new = self._bucketed(materialize.per_conv_edges(t_changed, m_changed))
         e_carried = (
             self._read("edges")
             .filter(
@@ -786,13 +802,8 @@ class Pipeline:
             )
             .join(changed_side, "conv_id", "left_anti")
         )
-        # DEPENDS_ON comes from the merged mentions; the kind filter
-        # reaches the parquet scan, so the other mentions never explode
         global_new = self._bucketed(
-            materialize.global_edges(
-                extract.mention_triples(mentions.filter(F.col("kind") == KIND_DEPENDS)),
-                link.same_as_edges(links_new),
-            )
+            materialize.global_edges(mentions, link.same_as_edges(links_new))
         )
         all_edges = (
             e_carried.select(*per_conv_new.columns)

@@ -89,6 +89,7 @@ PIPELINE_STATE = T.StructType(
         T.StructField("completed_at", T.StringType(), True),
         T.StructField("watermark", T.StringType(), True),
         T.StructField("stats", T.MapType(T.StringType(), T.StringType()), True),
+        T.StructField("elapsed_s", T.DoubleType(), True),
     ]
 )
 

@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..extraction import KIND_AT, KIND_GAZETTEER
+from ..extraction import KIND_AT, KIND_DEPENDS, KIND_GAZETTEER, KIND_TOOLCALL
 from ..functions.embeddings import embed_udf
+from .extract import assemble_triples, mention_triples
 
 _NODE_COLS = [
     "id",
@@ -173,8 +174,7 @@ def entity_adjacency(mentions: DataFrame, adj_n: int = 8) -> DataFrame:
 
 
 def entity_nodes(
-    links: DataFrame, mentions: DataFrame | None = None, embed: bool = True,
-    adj_n: int = 8,
+    links: DataFrame, mentions: DataFrame | None = None, adj_n: int = 8
 ) -> DataFrame:
     """One node per surface form (canonical_id → its canonical entity),
     plus the canonical entities themselves (which may be unobserved
@@ -220,7 +220,7 @@ def entity_nodes(
         _NULL_INT().alias("turn_idx"),
         _sig("Entity", F.col("name")).alias("signature_hash"),
         F.col("name").alias("source_text"),
-        (embed_udf(F.col("name")) if embed else _NULL_EMB()).alias("embedding"),
+        embed_udf(F.col("name")).alias("embedding"),
         F.concat(F.lit("entity:"), F.col("canonical_norm")).alias("canonical_id"),
     )
 
@@ -265,8 +265,8 @@ def tool_nodes(tool_ids: DataFrame) -> DataFrame:
 # NOTE: do NOT wrap embed_udf in F.when() over a unioned node table to
 # embed "only some types" — Spark extracts pandas UDFs into an
 # unconditional projection, so the UDF runs on EVERY row regardless of
-# the guard. Embed per branch (turn_nodes/entity_nodes embed flags)
-# before the union instead.
+# the guard. Embed per branch (entity_nodes always; turn_nodes unless
+# embed=False) before the union instead.
 
 # ---- the node and edge tables, split by scope ----
 # Per-conversation types are keyed by conv_id: a change to one
@@ -335,30 +335,42 @@ def _edge_rows(triples: DataFrame) -> DataFrame:
     )
 
 
-def per_conv_edges(triples: DataFrame) -> DataFrame:
+def per_conv_edges(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
     """IN_CONV/IN_TURN/REFERS_TO/MENTIONS/INVOKES edges. Each is unique
     by construction (its src embeds the turn id and extraction emits one
     row per key, first_in_turn) except INVOKES: a role='tool' turn that
     also says call:<same tool> yields it twice, so only the INVOKES
-    slice is deduplicated — never the full triple set."""
-    t = triples.filter(F.col("edge_type").isin(*PER_CONV_EDGE_TYPES))
+    slice is deduplicated — assembled from the tool turns and toolcall
+    mentions alone (both filters reach the scans), never the full
+    triple set."""
     invokes = F.col("edge_type") == "INVOKES"
-    return _edge_rows(
-        t.filter(~invokes).unionByName(_first_per_key(t.filter(invokes)))
+    rest = assemble_triples(transcripts, mentions).filter(
+        F.col("edge_type").isin(*PER_CONV_EDGE_TYPES) & ~invokes
     )
+    tool_triples = assemble_triples(
+        transcripts.filter(F.col("role") == "tool"),
+        mentions.filter(F.col("kind") == KIND_TOOLCALL),
+    )
+    return _edge_rows(rest.unionByName(_first_per_key(tool_triples.filter(invokes))))
 
 
-def global_edges(triples: DataFrame, same_as: DataFrame) -> DataFrame:
+def global_edges(mentions: DataFrame, same_as: DataFrame) -> DataFrame:
     """DEPENDS_ON edges (the same entity pair can be stated in many
-    turns: deduplicated) + the linker's SAME_AS edges."""
-    dep = _first_per_key(triples.filter(F.col("edge_type") == "DEPENDS_ON"))
-    return _edge_rows(dep.unionByName(same_as))
+    turns: deduplicated) + the linker's SAME_AS edges. DEPENDS_ON comes
+    from the kind='depends_on' mentions alone; the kind filter reaches
+    the scan, so no other mention row is exploded."""
+    deps = mention_triples(mentions.filter(F.col("kind") == KIND_DEPENDS))
+    return _edge_rows(_first_per_key(deps).unionByName(same_as))
 
 
-def build_edges(triples: DataFrame, same_as: DataFrame) -> DataFrame:
+def build_edges(
+    transcripts: DataFrame, mentions: DataFrame, same_as: DataFrame
+) -> DataFrame:
     """The full edge table (the INSERT-OR-REPLACE analog: deterministic
     ids, one row per key)."""
-    return per_conv_edges(triples).unionByName(global_edges(triples, same_as))
+    return per_conv_edges(transcripts, mentions).unionByName(
+        global_edges(mentions, same_as)
+    )
 
 
 def referential_violations(nodes: DataFrame, edges: DataFrame) -> DataFrame:
