@@ -371,28 +371,25 @@ class Pipeline:
         concurrent jobs fill executor gaps the other job's stage tails
         leave). Nothing in the node build reads the edges table: the Tool
         id dim comes from the source columns."""
-        t = self.transcripts()
         mentions, links = self._read("mentions"), self._read("links")
-        # triple assembly is narrow and UDF-free, so it reads the input
-        # without the rebalance shuffle the embedding branch needs
+        # triple assembly and the Tool ids are narrow and UDF-free, so
+        # they read the input without the rebalance shuffle the
+        # embedding branch needs
+        raw = self.spark.read.parquet(self.transcripts_path)
         edges = self._bucketed(
-            materialize.build_edges(
-                self.spark.read.parquet(self.transcripts_path),
-                mentions,
-                self._read("same_as"),
-            ),
+            materialize.build_edges(raw, mentions, self._read("same_as")),
             self.n_buckets,
         )
         # Turn rows embed after the layout's shuffle, so vectors never
         # cross an exchange; Mention rows keep the mentions scan's lineage
         per_conv = materialize.per_conv_nodes(
-            self._bucketed(t, self.n_buckets), mentions, links
+            self._bucketed(self.transcripts(), self.n_buckets), mentions, links
         )
         global_ = materialize.global_nodes(
             self._read("conversations"),
             links,
             mentions,
-            materialize.tool_source_ids(t, mentions),
+            materialize.tool_source_ids(raw, mentions),
         )
         nodes = self._bucketed(per_conv).unionByName(
             self._bucketed(global_, _GLOBAL_DIM_FILES)
@@ -412,11 +409,26 @@ class Pipeline:
         return stats
 
     # ---- orchestration ----
+    def _compile_work(self) -> tuple[int, int]:
+        """(generated classes Spark has compiled, JIT milliseconds) since
+        the JVM started."""
+        jvm = self.spark._jvm  # noqa: SLF001
+        return (
+            jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
+            jvm.java.lang.management.ManagementFactory.getCompilationMXBean().getTotalCompilationTime(),
+        )
+
     def _tracked(self, run_id: str, phase: str, watermark: str | None, body) -> dict:
         """Run ``body()`` between its state rows: 'running' first, then
-        'completed' with the stats it returns, or 'failed' if it raises;
-        both end rows carry the phase's wall seconds as ``elapsed_s``."""
+        'completed' with the stats it returns, or 'failed' if it raises.
+        Both end rows carry the phase's wall seconds as ``elapsed_s``;
+        the completed row also carries the compile work done meanwhile:
+        ``codegen_compiles`` (generated classes Spark compiled) and
+        ``jit_ms`` (JVM JIT milliseconds). Both are JVM-wide counters, so
+        phases that run concurrently (discover ∥ extract) each count the
+        other's work too."""
         started, t0 = _now(), time.perf_counter()
+        work0 = self._compile_work()
 
         def row(status: str, stats: dict) -> None:
             r = {
@@ -432,6 +444,10 @@ class Pipeline:
             if status != "running":
                 r["completed_at"] = _now()
                 r["elapsed_s"] = time.perf_counter() - t0
+            if status == "completed":
+                compiles, jit_ms = self._compile_work()
+                r["codegen_compiles"] = compiles - work0[0]
+                r["jit_ms"] = jit_ms - work0[1]
             self.state.append(r)
 
         row("running", {})
@@ -635,8 +651,7 @@ class Pipeline:
         dim — the committed rows of every conversation the delta neither
         ships nor deletes, plus the delta's own — and its changed ids:
         every conversation it ships or deletes. Those are re-indexed
-        whether or not their content hash moved, since the hash covers
-        only turn_idx and text, not role, tool or ts."""
+        whether or not their content hash moved."""
         delta = self.transcripts(path=delta_path)
         # reject ambiguous input up front: a conversation present in the
         # delta AND in the deletion list would otherwise be silently

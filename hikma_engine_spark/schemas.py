@@ -90,6 +90,8 @@ PIPELINE_STATE = T.StructType(
         T.StructField("watermark", T.StringType(), True),
         T.StructField("stats", T.MapType(T.StringType(), T.StringType()), True),
         T.StructField("elapsed_s", T.DoubleType(), True),
+        T.StructField("codegen_compiles", T.LongType(), True),
+        T.StructField("jit_ms", T.LongType(), True),
     ]
 )
 

@@ -4,6 +4,10 @@ Scale posture: these configs are the local-mode analog of a 1000-executor
 cluster profile — AQE on (runtime coalescing + skew-join splitting),
 Arrow for every pandas-UDF boundary, shuffle partitions sized to cores
 locally (on a real cluster: 2-3x total cores, AQE coalesces down).
+
+The generated-code cache (``spark.sql.codegen.cache.maxEntries``) holds
+1,000 classes instead of 100, so a build's compiled plans survive into
+the next build and the next incremental re-index.
 """
 
 from __future__ import annotations
@@ -65,11 +69,25 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # the cache is keyed by (class loader, source): one full build
+        # cycles through ~160 keys, and an LRU smaller than a cyclic
+        # access pattern never hits — at the default 100 every warm
+        # build Janino-compiled ~134 classes again
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # CodeGenerator sizes its cache once, in its static initializer, from
+    # SQLConf.get. Pipeline's first codegen runs on a pool thread, whose
+    # JVM thread (pinned-thread mode) has no active session, so SQLConf.get
+    # there returns Spark's defaults and the cache stays at 100 entries.
+    # Initialize it here, on the thread getOrCreate made the session active
+    # on; later sessions in this JVM keep the size the first one set.
+    spark._jvm.java.lang.Class.forName(  # noqa: SLF001
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
     return spark
 
 

@@ -25,10 +25,21 @@ _SEP = "\x1f"
 
 
 def per_turn_hash() -> F.Column:
-    """Order-independent per-turn digest: sha256(turn_idx <US> text)."""
+    """Order-independent per-turn digest over every column a turn's
+    nodes and edges read: sha256(turn_idx <US> role <US> tool <US> ts
+    <US> text), ts as epoch microseconds. Each field is coalesced to ''
+    — concat_ws skips NULLs, which would shift the later fields — after
+    a cast to string: a column that is NULL in every row of a parquet
+    file is typed void there, and coalesce(void, '') casts '' to BIGINT."""
+    fields = (
+        F.col("turn_idx"),
+        F.col("role"),
+        F.col("tool"),
+        F.unix_micros(F.col("ts").cast("timestamp")),
+        F.col("text"),
+    )
     return F.sha2(
-        F.concat_ws(_SEP, F.col("turn_idx").cast("string"), F.coalesce(F.col("text"), F.lit(""))),
-        256,
+        F.concat_ws(_SEP, *(F.coalesce(f.cast("string"), F.lit("")) for f in fields)), 256
     )
 
 

@@ -453,11 +453,10 @@ def test_delta_mode_duplicate_keys_rejected(spark, tiny_path, tmp_path, mode):
     assert {t: _digest(p._read(t)) for t in tables} == before
 
 
-def test_delta_mode_reindexes_role_tool_ts_only_change(spark, tiny_path, tmp_path):
-    """The content hash covers turn_idx and text only, but role, tool and
-    ts feed Turn properties, INVOKES edges, Tool nodes and the dim: a
-    delta that re-sends a conversation with only those changed must
-    still re-index it and end digest-equal to a full rebuild."""
+def _reindex_role_tool_ts_only_change(spark, tiny_path, tmp_path, delta: bool) -> None:
+    """Re-index the tiny 1-bucket store after one turn of c2 changes
+    only its role, tool and ts (text unchanged), then check the store
+    against a full rebuild of the new input."""
     v2 = pd.read_parquet(tiny_path)
     turn = (v2.conv_id == "c2") & (v2.turn_idx == 1)
     v2.loc[turn, ["role", "tool"]] = ["tool", "formatter"]
@@ -466,15 +465,20 @@ def test_delta_mode_reindexes_role_tool_ts_only_change(spark, tiny_path, tmp_pat
     v2.to_parquet(
         v2_path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
     )
-    delta_path = str(tmp_path / "meta_delta.parquet")
-    v2[v2.conv_id == "c2"].to_parquet(
-        delta_path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
-    )
+    kwargs = {}
+    if delta:
+        kwargs["delta_path"] = str(tmp_path / "meta_delta.parquet")
+        v2[v2.conv_id == "c2"].to_parquet(
+            kwargs["delta_path"],
+            index=False,
+            coerce_timestamps="us",
+            allow_truncated_timestamps=True,
+        )
 
     out = str(tmp_path / "meta_incr")
     Pipeline(spark, tiny_path, out, run_id="v1", n_buckets=1).run(resume=False)
     p_incr = Pipeline(spark, v2_path, out, run_id="v2", n_buckets=1)
-    res = p_incr.run_incremental(delta_path=delta_path)
+    res = p_incr.run_incremental(**kwargs)
     assert res.phase_stats["discover"]["changed_convs"] == 1
 
     p_full = Pipeline(spark, v2_path, str(tmp_path / "meta_full"), n_buckets=1)
@@ -482,6 +486,19 @@ def test_delta_mode_reindexes_role_tool_ts_only_change(spark, tiny_path, tmp_pat
     assert p_full.nodes().filter(F.col("id") == "tool:formatter").count() == 1
     for table in ("conversations", "mentions", "nodes", "edges"):
         assert _digest(p_incr._read(table)) == _digest(p_full._read(table))
+
+
+def test_delta_mode_reindexes_role_tool_ts_only_change(spark, tiny_path, tmp_path):
+    """Role, tool and ts feed Turn properties, INVOKES edges, Tool nodes
+    and the dim: a delta that re-sends a conversation with only those
+    changed must re-index it and end digest-equal to a full rebuild."""
+    _reindex_role_tool_ts_only_change(spark, tiny_path, tmp_path, delta=True)
+
+
+def test_content_hash_reindexes_role_tool_ts_only_change(spark, tiny_path, tmp_path):
+    """The content hash covers every turn column the store reads, so the
+    content-hash diff finds a role/tool/ts-only change too."""
+    _reindex_role_tool_ts_only_change(spark, tiny_path, tmp_path, delta=False)
 
 
 def test_compact_preserves_content(spark, corpus_pdf, corpus_path, tmp_path):

@@ -104,6 +104,25 @@ def test_state_rows_and_metrics(pipeline_out):
     assert all(
         isinstance(r["elapsed_s"], float) and r["elapsed_s"] > 0 for r in completed
     )
+    # compile work over the phase (JVM-wide counter deltas)
+    for key in ("codegen_compiles", "jit_ms"):
+        assert all(isinstance(r[key], int) and r[key] >= 0 for r in completed)
+
+
+def test_warm_build_reuses_generated_code(spark, tiny_path, tmp_path):
+    """A build's generated classes stay in Spark's codegen cache, so an
+    identical second build compiles next to nothing. With the default
+    100-entry cache, smaller than the ~160 (class loader, source) keys
+    one build cycles through, the second build recompiled ~130."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def build(name: str) -> int:
+        before = metric.getCount()
+        Pipeline(spark, tiny_path, str(tmp_path / name)).run(resume=False)
+        return metric.getCount() - before
+
+    build("first")
+    assert build("second") <= 20
 
 
 def test_bucketed_layout_matches_unbucketed(spark, corpus_path, pipeline_out, tmp_path):
